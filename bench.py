@@ -542,12 +542,12 @@ def main() -> None:
 
     # --- tile-pyramid raster LUT (r4): same LUT join keyed on mercator
     # z/x/y tiles; fact side pays one tile_xy(z+3) Arrow pass
-    from cosmospark.raster import assign_zones_tiles_raster, tile_pixel_lut
+    from cosmospark.cells import MERCATOR
 
-    lut_t = tile_pixel_lut(zones, z=9).localCheckpoint()
-    rtile_df = assign_zones_tiles_raster(pts, zones, z=9, lut=lut_t).filter(
-        F.col("zone_id") >= 0
-    )
+    lut_t = zone_pixel_lut(zones, res=9, grid=MERCATOR).localCheckpoint()
+    rtile_df = assign_zones_raster(
+        pts, zones, res=9, lut=lut_t, grid=MERCATOR
+    ).filter(F.col("zone_id") >= 0)
     n_rtile, rtile_sec = _timed("pip_assign_raster_tile", rtile_df.count)
     raster_tile_images_per_sec = round(n_pip / rtile_sec) if rtile_sec > 0 else 0
 

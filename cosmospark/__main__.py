@@ -136,8 +136,9 @@ def cmd_rasterize(args) -> int:
     joins)."""
     from pyspark.sql import SparkSession
 
+    from cosmospark.cells import MERCATOR
     from cosmospark.pipeline import read_zones
-    from cosmospark.raster import tile_pixel_lut, zone_pixel_lut
+    from cosmospark.raster import zone_pixel_lut
     from cosmospark.session import get_spark
 
     pre = SparkSession.getActiveSession()
@@ -145,7 +146,7 @@ def cmd_rasterize(args) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     zones = read_zones(spark, args.input)
     if args.tiles:
-        lut = tile_pixel_lut(zones, args.zoom, exact=args.exact)
+        lut = zone_pixel_lut(zones, args.zoom, exact=args.exact, grid=MERCATOR)
         grid = {"grid": "tiles", "z": args.zoom}
     else:
         lut = zone_pixel_lut(zones, args.res, exact=args.exact)

@@ -60,74 +60,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     return children.unionByName(selfs)
 
 
-def _large_star_bc(e: DataFrame) -> DataFrame:
-    """Broadcast-star large star (r7): the per-node neighborhood min is
-    NODE-scale, not edge-scale — a map-side-combined groupBy reduces
-    the edge set to one (u, min) row per node before any exchange, and
-    the tiny min table broadcasts back onto the unshuffled edges. The
-    window form exchanges+sorts the full symmetrized edge multiset
-    (2|E| rows); this form's only exchange carries ≤|V| aggregated
-    rows. Identical output multiset modulo row order (same m per u)."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = sym.groupBy("u").agg(F.min("v").alias("_mv")).select(
-        "u", F.least("u", "_mv").alias("m")
-    )
-    return (
-        sym.join(F.broadcast(m), "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-
-
-def _small_star_bc(e: DataFrame) -> DataFrame:
-    """Broadcast-star small star (r7) — see _large_star_bc. The selfs
-    leg emits one row per NODE instead of one per edge; the round's
-    distinct() collapses the window form's per-edge duplicates to the
-    same set, so the checkpointed edge SET is identical."""
-    o = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    m = o.groupBy("u").agg(F.min("v").alias("m"))
-    children = (
-        o.join(F.broadcast(m), "u")
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    selfs = m.select("u", F.col("m").alias("v"))
-    return children.unionByName(selfs)
-
-
-def _star_round_bc(e: DataFrame) -> DataFrame:
-    """Fused broadcast-star round (r7): small_star_bc∘large_star_bc
-    with one fewer pass over the edge multiset. Large-star's output
-    edges are (v, m(u)) for each symmetrized (u,v) with v > u, and they
-    are ALREADY oriented hi→lo (m(u) ≤ u < v), so small-star's per-node
-    min is m2(v) = min over those rows of m(u) — computable directly
-    from sym ⋈ m without materializing the intermediate edge list; the
-    children/selfs legs then need only one more sym ⋈ m ⋈ m2 pass.
-    Emits the identical row multiset as the two-step composition
-    (children: (m(u), m2(v)) where m(u) != m2(v); selfs: one (v, m2(v))
-    per node v), so the round's distinct() yields the same edge set."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = sym.groupBy("u").agg(F.min("v").alias("_mv")).select(
-        "u", F.least("u", "_mv").alias("m")
-    )
-    # large-star rows, not materialized: (v, mu) per sym row with v > u
-    lrows = (
-        sym.join(F.broadcast(m), "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("lv"), F.col("m").alias("mu"))
-    )
-    m2 = lrows.groupBy("lv").agg(F.min("mu").alias("m2"))
-    children = (
-        lrows.join(F.broadcast(m2), "lv")
-        .filter(F.col("mu") != F.col("m2"))
-        .select(F.col("mu").alias("u"), F.col("m2").alias("v"))
-    )
-    selfs = m2.select(F.col("lv").alias("u"), F.col("m2").alias("v"))
-    return children.unionByName(selfs)
-
-
 def _star_round_oriented(e: DataFrame) -> DataFrame:
     """Fused broadcast-star round for ORIENTED edge sets (u > v on
     every row — connected_components normalizes round-1 input, and
@@ -144,7 +76,9 @@ def _star_round_oriented(e: DataFrame) -> DataFrame:
         (lo, hi), so the output is (hi, M(lo)) — one broadcast join on
         the v column of the edge table as stored.
 
-    The row multiset equals _star_round_bc(e)'s modulo the selfs leg's
+    The row multiset equals that of the symmetrized fused round
+    (``_star_round_bc``, a reference form in ``tests/test_graph.py``)
+    modulo the selfs leg's
     per-edge duplicates (children: (M(lo), m2(hi)) where they differ;
     selfs: one (hi, m2(hi)) per hi), so the post-distinct edge set —
     hence fixpoint, signature and labels — is identical, while each

@@ -922,9 +922,9 @@ def q_geo_rasterize(spark, sf_dir):
     live on the uniform 512×512 sub-lattice, so the DuckDB oracle
     re-derives the identical centers with +,*,/ only and counts them
     with rectangle BETWEEN (fixture zones are rectangles)."""
-    from cosmospark.raster import rasterize_zones_cells
+    from cosmospark.raster import rasterize_zones
 
-    r = rasterize_zones_cells(_lux_typed_zones(spark), res=_RAST_RES, px=_RAST_PX)
+    r = rasterize_zones(_lux_typed_zones(spark), res=_RAST_RES, px=_RAST_PX)
     return r.select("zone_id", "cell", "n_inside").orderBy("zone_id", "cell")
 
 
@@ -1466,10 +1466,13 @@ def q_geo_raster_tile_assign(spark, sf_dir):
     bitsets, folds to a (tile, pixel→zone) LUT, and each point resolves
     via one tile_xy(z+3) evaluation + equi-join + element_at. The
     oracle re-derives the identical mercator pixel lattice in SQL."""
-    from cosmospark.raster import assign_zones_tiles_raster
+    from cosmospark.raster import assign_zones_raster
 
-    out = assign_zones_tiles_raster(
-        _pts_df(spark), _lux_typed_zones(spark), z=_TILE_RAST_Z
+    out = assign_zones_raster(
+        _pts_df(spark),
+        _lux_typed_zones(spark),
+        res=_TILE_RAST_Z,
+        grid=cells.MERCATOR,
     )
     return out.select("pid", "zone_id").orderBy("pid")
 
@@ -1479,10 +1482,14 @@ def q_geo_raster_tile_assign_exact(spark, sf_dir):
     answer from the LUT, boundary pixels refine through the exact PIP
     kernel — oracle is the exact rectangle-PIP argmin, proving the
     accelerated path changes nothing."""
-    from cosmospark.raster import assign_zones_tiles_raster
+    from cosmospark.raster import assign_zones_raster
 
-    out = assign_zones_tiles_raster(
-        _pts_df(spark), _lux_typed_zones(spark), z=_TILE_RAST_Z, exact=True
+    out = assign_zones_raster(
+        _pts_df(spark),
+        _lux_typed_zones(spark),
+        res=_TILE_RAST_Z,
+        exact=True,
+        grid=cells.MERCATOR,
     )
     return out.select("pid", "zone_id").orderBy("pid")
 
@@ -1661,21 +1668,21 @@ def q_geo_tile_lut_incremental(spark, sf_dir):
     """Incremental maintenance of the TILE-pyramid LUT (r5 — the
     mercator twin of q_geo_lut_incremental): same zone-dim edit (shift
     the smallest zone east 0.3°, remove the second smallest), patched
-    via incremental_lut_update(grid='tiles')/apply_lut_patch — re-folds
+    via incremental_lut_update(grid=MERCATOR)/apply_lut_patch — re-folds
     ONLY the edited zones' old∪new tile footprint. Emits the patched
     LUT exploded to (cell, pix, zone_id); the oracle re-derives the
     entire post-edit tile LUT from the mercator pixel lattice."""
     from cosmospark.raster import (
         apply_lut_patch,
         incremental_lut_update,
-        rasterize_zone_bitsets_tiles,
-        tile_pixel_lut,
+        rasterize_zone_bitsets,
+        zone_pixel_lut,
     )
 
     mod_id, rm_id = _lut_edit_ids()
     zones = _lux_typed_zones(spark)
-    bitsets0 = rasterize_zone_bitsets_tiles(zones, _TILE_RAST_Z)
-    lut0 = tile_pixel_lut(zones, _TILE_RAST_Z)
+    bitsets0 = rasterize_zone_bitsets(zones, _TILE_RAST_Z, cells.MERCATOR)
+    lut0 = zone_pixel_lut(zones, _TILE_RAST_Z, grid=cells.MERCATOR)
     shifted = zones.filter(F.col("id") == mod_id).withColumn(
         "rings",
         F.expr(
@@ -1685,7 +1692,7 @@ def q_geo_tile_lut_incremental(spark, sf_dir):
         ),
     )
     _, affected, patch = incremental_lut_update(
-        bitsets0, shifted, [rm_id], _TILE_RAST_Z, grid="tiles"
+        bitsets0, shifted, [rm_id], _TILE_RAST_Z, grid=cells.MERCATOR
     )
     lut = apply_lut_patch(lut0, affected, patch)
     return (
@@ -3009,11 +3016,13 @@ def q_doc_fingerprint(spark, sf_dir):
     long, no overflow below ~10⁹-word docs × 3100/term) — identical
     integers, with the per-word arithmetic in whole-stage codegen and
     the exchange carrying doc-scale partial sums. `split` never yields
-    an empty array, so no doc_id disappears from the aggregate."""
+    an empty array, and `explode_outer` keeps a NULL-text document as
+    one NULL word, whose all-NULL sum gives the oracle's NULL
+    fingerprint, so no doc_id disappears from the aggregate."""
     d = _widen_if_narrow(
         spark, _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    ex = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    ex = d.select("doc_id", F.explode_outer(F.split("text", " ")).alias("w"))
     term = F.expr("length(w) * 31 + coalesce(ascii(substring(w, 1, 1)), 0)")
     return (
         ex.groupBy("doc_id")

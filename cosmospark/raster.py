@@ -1,30 +1,38 @@
 """Raster ↔ vector tiling over the zone model.
 
 The reference is vector-only (GEOS geometry end to end); the north-star
-graft adds a raster leg: rasterize each zone's polygon into per-cell /
-per-tile pixel occupancy masks (vector → raster), and recover vector
-boxes from a mask (raster → vector), so an image fact table can be
-joined against zone coverage at pixel granularity.
+graft adds a raster leg: rasterize each zone's polygon into per-cell
+pixel occupancy masks (vector → raster), and recover vector boxes from
+a mask (raster → vector), so an image fact table can be joined against
+zone coverage at pixel granularity.
+
+One path serves both grids of ``cells``: the linear quadkey plane
+(``QUADKEY``, the default) and the web-mercator z/x/y tile pyramid
+(``MERCATOR``, ``res`` is the zoom). Every public function takes
+``grid=``; the descent, the lazy interior expansion, the mask and bitset
+rows, the LUT fold and the fact join are grid-agnostic, and the grid
+value supplies the cell and pixel geometry, the output key and the
+fact-side encode.
 
 Scale shape: one mapInPandas over the ZONE table (zone-dim scale,
 embarrassingly parallel per zone — 10^6 zones spread over executors),
-each zone emitting one row per covering cell/tile. No shuffle; the
-output is a (zone_id, cell) keyed table that equi-joins against
-cell-encoded facts. All pixel tests run through the same numpy PIP
-kernel as zone assignment (``geom.pip_covers``), vectorized across
-every pixel of every covering cell of a zone in one call.
+each zone emitting one row per covering cell. No shuffle; the output is
+a (zone_id, cell) keyed table that equi-joins against cell-encoded
+facts. All pixel tests run through the same numpy PIP kernel as zone
+assignment (``geom.pip_covers``), vectorized across every pixel of every
+covering cell of a zone in one call.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from cosmospark import cells, geom
+from cosmospark import geom
+from cosmospark.cells import QUADKEY, Grid
 
 # ---------------------------------------------------------------------------
 # Planet-safety (VERDICT r3 #1): a zone is rasterized by HIERARCHICAL
@@ -40,41 +48,40 @@ from cosmospark import cells, geom
 # multi-GB temporaries nor become a single straggler kernel call.
 
 _START_CELLS = 1024  # descend from the coarsest res whose bbox cover fits this
+MAX_PIXELS = 1 << 20  # pixel tests per kernel call
 
 
-def _default_max_pixels() -> int:
-    return int(os.environ.get("COSMOSPARK_RASTER_MAX_PIXELS", str(1 << 20)))
-
-
-def _bbox_cell_count(minx, miny, maxx, maxy, res: int) -> int:
-    x0, y0 = cells._grid_xy(np.array([minx]), np.array([miny]), res)
-    x1, y1 = cells._grid_xy(np.array([maxx]), np.array([maxy]), res)
-    return int((x1[0] - x0[0] + 1) * (y1[0] - y0[0] + 1))
+def _bbox_cell_count(grid: Grid, minx, miny, maxx, maxy, res: int) -> int:
+    x0, y0, x1, y1 = grid.bbox_range(minx, miny, maxx, maxy, res)
+    return int((x1 - x0 + 1) * (y1 - y0 + 1))
 
 
 def _coarse_cover(
-    rr, res: int, stats: dict | None = None
+    rr, res: int, grid: Grid, stats: dict | None = None
 ) -> tuple[list[tuple[np.ndarray, int]], np.ndarray]:
     """Coarse→fine descent → (full cells grouped by the res they were
-    PROVEN at, boundary cells at ``res``). FULL cells are entirely
-    inside the zone (every pixel of every descendant is inside — no
-    kernel needed); BOUNDARY cells may meet the zone's edge and need
-    per-pixel tests; everything else provably misses the zone.
-    Classification is ``geom.rects_classify`` (sound for FULL/EMPTY,
-    conservative for BOUNDARY). Memory here is O(boundary frontier) —
-    perimeter-proportional; interior FULL cells stay UNEXPANDED (a
-    continent proven FULL at res 4 is one entry, not 4^(res-4))."""
+    PROVEN at, boundary cells at ``res``), all as Morton codes. FULL
+    cells are entirely inside the zone (every pixel of every descendant
+    is inside — no kernel needed); BOUNDARY cells may meet the zone's
+    edge and need per-pixel tests; everything else provably misses the
+    zone. Classification is ``geom.rects_classify`` (sound for
+    FULL/EMPTY, conservative for BOUNDARY). Memory here is O(boundary
+    frontier) — perimeter-proportional; interior FULL cells stay
+    UNEXPANDED (a continent proven FULL at res 4 is one entry, not
+    4^(res-4))."""
     minx, miny, maxx, maxy = geom.bbox(rr)
     r0 = res
-    while r0 > 1 and _bbox_cell_count(minx, miny, maxx, maxy, r0) > _START_CELLS:
+    while (
+        r0 > 1
+        and _bbox_cell_count(grid, minx, miny, maxx, maxy, r0) > _START_CELLS
+    ):
         r0 -= 1
-    cand = cells.cells_for_bbox(minx, miny, maxx, maxy, r0)
+    cand = grid.bbox_cells(minx, miny, maxx, maxy, r0)
     full_groups: list[tuple[np.ndarray, int]] = []
     boundary = np.empty(0, dtype=np.int64)
     r = r0
     while len(cand):
-        b = cells.cell_bounds_batch(cand, r)
-        cls = geom.rects_classify(*b, rr)
+        cls = geom.rects_classify(*grid.bounds(cand, r), rr)
         if stats is not None:
             stats["classify_calls"] = stats.get("classify_calls", 0) + 1
             stats["cells_classified"] = stats.get("cells_classified", 0) + len(cand)
@@ -119,15 +126,16 @@ def _iter_full_cells(
 
 
 def zone_raster_cover(
-    rr, res: int, stats: dict | None = None
+    rr, res: int, grid: Grid = QUADKEY, stats: dict | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """→ (full_cells, boundary_cells) at ``res`` for one zone. Eager
-    convenience wrapper over ``_coarse_cover`` — materializes the FULL
-    interior, so peak memory is O(interior area in cells); bounded at
-    the res values used in tests/oracles (≤ 9), but streaming consumers
-    (the rasterizers/LUT builders) go through ``_coarse_cover`` +
-    ``_iter_full_cells`` instead and never hold the full interior."""
-    full_groups, boundary = _coarse_cover(rr, res, stats)
+    """→ (full_cells, boundary_cells) at ``res`` for one zone, as Morton
+    codes. Eager convenience wrapper over ``_coarse_cover`` —
+    materializes the FULL interior, so peak memory is O(interior area in
+    cells); bounded at the res values used in tests/oracles (≤ 9), but
+    streaming consumers (the rasterizers/LUT builders) go through
+    ``_coarse_cover`` + ``_iter_full_cells`` instead and never hold the
+    full interior."""
+    full_groups, boundary = _coarse_cover(rr, res, grid, stats)
     parts = list(_iter_full_cells(full_groups, res, 1 << 20))
     full_cells = (
         np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
@@ -138,6 +146,51 @@ def zone_raster_cover(
 def _chunked(arr: np.ndarray, size: int) -> Iterator[np.ndarray]:
     for s in range(0, len(arr), size):
         yield arr[s : s + size]
+
+
+def _map_zones(
+    zones: DataFrame,
+    schema: T.StructType,
+    zone_row_batches: Callable[[tuple, list], Iterator[list[dict]]],
+) -> DataFrame:
+    """One mapInPandas over the zone table: ``zone_row_batches(zone,
+    rings)`` yields row batches for each zone that has rings, and they
+    stream out in frames of about 64k rows, so peak executor memory is
+    bounded even for a zone covering 10^5+ cells."""
+    cols = schema.fieldNames()
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            buf: list[dict] = []
+            for zone in pdf.itertuples(index=False):
+                if zone.rings is None or len(zone.rings) == 0:
+                    continue
+                rr = geom.rows_to_rings(zone.rings)
+                for rows in zone_row_batches(zone, rr):
+                    buf.extend(rows)
+                    if len(buf) >= 65536:
+                        yield pd.DataFrame(buf, columns=cols)
+                        buf = []
+            yield pd.DataFrame(buf, columns=cols)
+
+    return zones.mapInPandas(_run, schema)
+
+
+def _pixel_grid(cols: np.ndarray, rows: np.ndarray, px: int):
+    """Per-column and per-row pixel values → two (ncells, px, px)
+    row-major grids."""
+    return (
+        np.repeat(cols[:, None, :], px, axis=1),
+        np.repeat(rows[:, :, None], px, axis=2),
+    )
+
+
+def _pixel_centers(grid: Grid, codes: np.ndarray, res: int, px: int):
+    """Pixel-center grids for res-cells: (ncells, px, px) lon/lat, in
+    the grid's own arithmetic (the SQL oracles re-derive it bit for
+    bit)."""
+    return _pixel_grid(*grid.pixel_centers(codes, res, px), px)
+
 
 _RASTER_SCHEMA = T.StructType(
     [
@@ -168,133 +221,59 @@ def _mask_rows(zid, rr, lon_c, lat_c, keys):
     return rows
 
 
-def _pixel_centers(cc: np.ndarray, res: int, px: int):
-    """Pixel-center grids for res-cells: (ncells, px, px) lon/lat.
-    Same +,*,/ arithmetic order as the SQL oracle (bit-for-bit)."""
-    nf = float((1 << res) * px)
-    off = np.arange(px, dtype=np.float64)
-    cx, cy = cells.morton_deinterleave(cc, res)
-    ii = cx[:, None] * px + off[None, :]
-    jj = cy[:, None] * px + off[None, :]
-    lon1 = -180.0 + (ii + 0.5) * 360.0 / nf
-    lat1 = -90.0 + (jj + 0.5) * 180.0 / nf
-    lon_c = np.repeat(lon1[:, None, :], px, axis=1)
-    lat_c = np.repeat(lat1[:, :, None], px, axis=2)
-    return lon_c, lat_c
-
-
 def _zone_mask_row_batches(
-    zid, rr, res: int, px: int, max_pixels: int, stats: dict | None = None
+    zid,
+    rr,
+    res: int,
+    px: int,
+    grid: Grid,
+    max_pixels: int = MAX_PIXELS,
+    stats: dict | None = None,
 ) -> Iterator[list[dict]]:
     """One zone → row batches for ``_RASTER_SCHEMA``, planet-safe:
     hierarchical cover, closed-form all-ones masks for FULL cells, and
     pixel kernels only on BOUNDARY cells in ≤ ``max_pixels`` chunks."""
-    full_groups, bnd = _coarse_cover(rr, res, stats)
+    full_groups, bnd = _coarse_cover(rr, res, grid, stats)
     step = max(1, max_pixels // (px * px))
     ones = np.packbits(np.ones(px * px, dtype=bool)).tobytes()
     for chunk in _iter_full_cells(full_groups, res, step):
         yield [
             {
                 "zone_id": int(zid),
-                "cell": int(c),
+                "cell": int(k),
                 "mask": ones,
                 "n_inside": px * px,
             }
-            for c in chunk
+            for k in grid.key(chunk, res)
         ]
     for chunk in _chunked(bnd, step):
         if stats is not None:
             stats["kernel_calls"] = stats.get("kernel_calls", 0) + 1
-        lon_c, lat_c = _pixel_centers(chunk, res, px)
-        yield _mask_rows(zid, rr, lon_c, lat_c, chunk)
+        lon_c, lat_c = _pixel_centers(grid, chunk, res, px)
+        yield _mask_rows(zid, rr, lon_c, lat_c, grid.key(chunk, res))
 
 
-def rasterize_zones_cells(
-    zones: DataFrame, res: int, px: int = 8
+def rasterize_zones(
+    zones: DataFrame, res: int, px: int = 8, grid: Grid = QUADKEY
 ) -> DataFrame:
-    """Vector → raster on the linear quadkey grid: for every zone and
-    every res-cell it covers or touches, a ``px``×``px`` occupancy
-    bitmask of pixel centers (row-major, ``np.packbits`` layout) plus
-    the inside-pixel count.
+    """Vector → raster: for every zone and every res-cell of ``grid`` it
+    covers or touches, a ``px``×``px`` occupancy bitmask of pixel
+    centers (row-major, ``np.packbits`` layout) plus the inside-pixel
+    count, keyed by the grid's ``cell`` key.
 
-    Pixel centers are the centers of the uniform sub-lattice
-    ``lon = -180 + (i + 0.5) * 360 / (2^res * px)`` (same for lat over
-    180°) — pure +,*,/ arithmetic, so an SQL oracle reproduces them
-    bit-for-bit. Planet-safe via hierarchical descent + bounded kernel
-    chunks (see module header); output batches stream out of the
-    mapInPandas iterator, so peak executor memory is bounded even for a
-    zone covering 10^5+ cells."""
+    On ``QUADKEY`` pixel centers are the centers of the uniform
+    sub-lattice ``lon = -180 + (i + 0.5) * 360 / (2^res * px)`` (same
+    for lat over 180°) — pure +,*,/ arithmetic, so an SQL oracle
+    reproduces them bit-for-bit. On ``MERCATOR`` mask rows run
+    north→south (row b = b-th pixel DOWN from the tile's top edge).
+    Planet-safe via hierarchical descent + bounded kernel chunks (see
+    module header)."""
     z = zones.select(F.col("id").alias("zone_id"), "rings")
-    max_pixels = _default_max_pixels()
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["zone_id", "cell", "mask", "n_inside"]
-        for pdf in batches:
-            buf: list[dict] = []
-            for zid, rrows in zip(pdf["zone_id"], pdf["rings"]):
-                if rrows is None or len(rrows) == 0:
-                    continue
-                rr = geom.rows_to_rings(rrows)
-                for rows in _zone_mask_row_batches(zid, rr, res, px, max_pixels):
-                    buf.extend(rows)
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-            yield pd.DataFrame(buf, columns=cols)
-
-    return z.mapInPandas(_run, _RASTER_SCHEMA)
-
-
-def rasterize_zones_tiles(zones: DataFrame, z: int, px: int = 64) -> DataFrame:
-    """Vector → raster on the web-mercator z/x/y tile pyramid (the
-    ``tile_encode`` packing): per covering tile, a ``px``×``px`` pixel
-    occupancy mask. Pixel x is linear in lon; pixel y inverts the
-    mercator projection. Planet-safe like the quadkey variant:
-    hierarchical FULL/EMPTY/BOUNDARY descent (``tile_raster_cover``),
-    closed-form all-ones masks for interior tiles, bounded kernel
-    chunks for the perimeter; mask rows are north→south (row b = b-th
-    pixel DOWN from the tile's top edge)."""
-    zz = zones.select(F.col("id").alias("zone_id"), "rings")
-    max_pixels = _default_max_pixels()
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["zone_id", "cell", "mask", "n_inside"]
-        key_hi = np.int64(z) << 58
-        step = max(1, max_pixels // (px * px))
-        ones = np.packbits(np.ones(px * px, dtype=bool)).tobytes()
-        for pdf in batches:
-            buf: list[dict] = []
-            for zid, rrows in zip(pdf["zone_id"], pdf["rings"]):
-                if rrows is None or len(rrows) == 0:
-                    continue
-                rr = geom.rows_to_rings(rrows)
-                full_groups, bx, by = _tile_coarse_cover(rr, z)
-                for cx0, cy0 in _iter_full_tiles(full_groups, z, step):
-                    keys = key_hi | (cx0 << 29) | cy0
-                    buf.extend(
-                        {
-                            "zone_id": int(zid),
-                            "cell": int(k),
-                            "mask": ones,
-                            "n_inside": px * px,
-                        }
-                        for k in keys
-                    )
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-                for s in range(0, len(bx), step):
-                    cx, cy = bx[s : s + step], by[s : s + step]
-                    lon_c, lat_c = _tile_pixel_centers(cx, cy, z, px)
-                    keys = key_hi | (cx << 29) | cy
-                    buf.extend(_mask_rows(zid, rr, lon_c, lat_c, keys))
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-            yield pd.DataFrame(buf, columns=cols)
-
-    out = zz.mapInPandas(_run, _RASTER_SCHEMA)
-    return out.withColumnRenamed("cell", "tile_id")
+    return _map_zones(
+        z,
+        _RASTER_SCHEMA,
+        lambda zone, rr: _zone_mask_row_batches(zone.zone_id, rr, res, px, grid),
+    )
 
 
 def unpack_mask(mask: bytes, px: int) -> np.ndarray:
@@ -339,15 +318,6 @@ def boxes_to_mask(boxes: np.ndarray, px: int) -> np.ndarray:
     return m
 
 
-# morton-order permutation for an 8×8 pixel block: bit index
-# interleave(colbits, rowbits) ← row-major index row*8+col, so a point's
-# pixel bit is just (fine_morton_cell & 63) — no deinterleave in the join
-_MORTON8 = np.zeros(64, dtype=np.int64)
-for _m in range(64):
-    _a = ((_m >> 1) & 1) | (((_m >> 3) & 1) << 1) | (((_m >> 5) & 1) << 2)
-    _b = (_m & 1) | (((_m >> 2) & 1) << 1) | (((_m >> 4) & 1) << 2)
-    _MORTON8[_m] = _b * 8 + _a
-
 _BITSET_SCHEMA = T.StructType(
     [
         T.StructField("zone_id", T.LongType()),
@@ -361,11 +331,13 @@ _BITSET_SCHEMA = T.StructType(
 )
 
 
-def rasterize_zone_bitsets(zones: DataFrame, res: int) -> DataFrame:
+def rasterize_zone_bitsets(
+    zones: DataFrame, res: int, grid: Grid = QUADKEY
+) -> DataFrame:
     """Vector → raster with a JOINABLE encoding: per (zone, res-cell)
-    int64 bitsets of the cell's 8×8 pixels in MORTON pixel order, plus
-    the zone's (rank, area) argmin keys. A point's pixel bit is the low
-    6 bits of its res+3 Morton cell — see ``assign_zones_raster``.
+    int64 bitsets of the cell's 8×8 pixels in the grid's pixel bit
+    order, plus the zone's (rank, area) argmin keys. A point's pixel bit
+    comes from its res+3 cell — see ``assign_zones_raster``.
 
     Three bitsets per row:
       * ``mask_bits``  — pixel CENTER inside the zone (the approximate
@@ -384,35 +356,24 @@ def rasterize_zone_bitsets(zones: DataFrame, res: int) -> DataFrame:
     z = zones.select(
         F.col("id").alias("zone_id"), rank.cast("int").alias("rank"), "rings"
     )
-    px = 8
-    max_pixels = _default_max_pixels()
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "zone_id", "rank", "area", "cell",
-            "mask_bits", "full_bits", "touch_bits",
-        ]
-        for pdf in batches:
-            buf: list[dict] = []
-            for zid, rk, rrows in zip(pdf["zone_id"], pdf["rank"], pdf["rings"]):
-                if rrows is None or len(rrows) == 0:
-                    continue
-                rr = geom.rows_to_rings(rrows)
-                area = geom.area(rr)
-                for rows in _zone_bitset_row_batches(
-                    zid, rk, area, rr, res, max_pixels
-                ):
-                    buf.extend(rows)
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-            yield pd.DataFrame(buf, columns=cols)
-
-    return z.mapInPandas(_run, _BITSET_SCHEMA)
+    return _map_zones(
+        z,
+        _BITSET_SCHEMA,
+        lambda zone, rr: _zone_bitset_row_batches(
+            zone.zone_id, zone.rank, geom.area(rr), rr, res, grid
+        ),
+    )
 
 
 def _zone_bitset_row_batches(
-    zid, rk, area, rr, res: int, max_pixels: int, stats: dict | None = None
+    zid,
+    rk,
+    area,
+    rr,
+    res: int,
+    grid: Grid,
+    max_pixels: int = MAX_PIXELS,
+    stats: dict | None = None,
 ) -> Iterator[list[dict]]:
     """One zone → bitset row batches, planet-safe (hierarchical cover +
     bounded kernel chunks). FULL cells emit closed-form all-ones rows
@@ -427,42 +388,42 @@ def _zone_bitset_row_batches(
     perimeter without weakening the stability proof in
     ``zone_pixel_lut``."""
     px = 8
-    nf = float((1 << res) * px)
-    w = 360.0 / nf
-    h = 180.0 / nf
     pow2 = np.int64(1) << np.arange(64, dtype=np.int64)
+    order = grid.pix_order
     base = {"zone_id": int(zid), "rank": int(rk), "area": float(area)}
-    full_groups, bnd = _coarse_cover(rr, res, stats)
+    full_groups, bnd = _coarse_cover(rr, res, grid, stats)
     step = max(1, max_pixels // (px * px))
     for chunk in _iter_full_cells(full_groups, res, step):
         yield [
-            dict(base, cell=int(c), mask_bits=-1, full_bits=-1, touch_bits=-1)
-            for c in chunk
+            dict(base, cell=int(k), mask_bits=-1, full_bits=-1, touch_bits=-1)
+            for k in grid.key(chunk, res)
         ]
     for chunk in _chunked(bnd, step):
         if stats is not None:
             stats["kernel_calls"] = stats.get("kernel_calls", 0) + 1
         nc = len(chunk)
-        lon_c, lat_c = _pixel_centers(chunk, res, px)
+        lon_c, lat_c = _pixel_centers(grid, chunk, res, px)
         hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(
             nc, px * px
         )
-        pminx = (lon_c - 0.5 * w).ravel()
-        pminy = (lat_c - 0.5 * h).ravel()
+        minx, miny, maxx, maxy = grid.pixel_rects(chunk, res, px)
+        pminx, pminy = _pixel_grid(minx, miny, px)
+        pmaxx, pmaxy = _pixel_grid(maxx, maxy, px)
         ehit = geom._rect_edge_hits(
-            pminx, pminy, pminx + w, pminy + h, rr
+            pminx.ravel(), pminy.ravel(), pmaxx.ravel(), pmaxy.ravel(), rr
         ).reshape(nc, px * px)
         fullv = hit & ~ehit
         touchv = hit | ehit
-        bits = (hit[:, _MORTON8] * pow2[None, :]).sum(axis=1)
-        fbits = (fullv[:, _MORTON8] * pow2[None, :]).sum(axis=1)
-        tbits = (touchv[:, _MORTON8] * pow2[None, :]).sum(axis=1)
+        bits = (hit[:, order] * pow2[None, :]).sum(axis=1)
+        fbits = (fullv[:, order] * pow2[None, :]).sum(axis=1)
+        tbits = (touchv[:, order] * pow2[None, :]).sum(axis=1)
+        keys = grid.key(chunk, res)
         out = []
         for ci in np.nonzero(bits | tbits)[0]:
             out.append(
                 dict(
                     base,
-                    cell=int(chunk[ci]),
+                    cell=int(keys[ci]),
                     mask_bits=int(bits[ci]),
                     full_bits=int(fbits[ci]),
                     touch_bits=int(tbits[ci]),
@@ -472,13 +433,12 @@ def _zone_bitset_row_batches(
 
 
 def _fold_pixel_lut(
-    rast: DataFrame, exact: bool, extra_meta: dict | None = None
+    rast: DataFrame, exact: bool, res: int, grid: Grid
 ) -> DataFrame:
-    """Shared LUT fold over a (zone_id, rank, area, cell, mask_bits,
-    full_bits, touch_bits) bitset table — see ``zone_pixel_lut`` for the
-    semantics; ``tile_pixel_lut`` reuses it on the mercator grid.
-    ``extra_meta`` is stamped alongside the build mode (grid res/zoom,
-    validated at assignment time)."""
+    """LUT fold over a (zone_id, rank, area, cell, mask_bits, full_bits,
+    touch_bits) bitset table — see ``zone_pixel_lut`` for the semantics.
+    The build mode and the grid's ``res`` are stamped as ``zone_arr``
+    metadata and validated at assignment time."""
     sel = "mask_bits" if not exact else "touch_bits"
     per_pix = (
         rast.select(
@@ -518,20 +478,23 @@ def _fold_pixel_lut(
             # and lets assign_zones_raster reject a LUT whose build mode
             # disagrees with its `exact` flag (ADVICE r3)
             F.expr("transform(sequence(0, 63), i -> coalesce(_m[i], -1L))").alias(
-                "zone_arr", metadata={"lut_exact": bool(exact), **(extra_meta or {})}
+                "zone_arr", metadata={"lut_exact": bool(exact), grid.lut_key: res}
             ),
         )
     )
 
 
-def zone_pixel_lut(zones: DataFrame, res: int, exact: bool = False) -> DataFrame:
+def zone_pixel_lut(
+    zones: DataFrame, res: int, exact: bool = False, grid: Grid = QUADKEY
+) -> DataFrame:
     """Fold the rasterized zone dim into a per-cell PIXEL LOOKUP TABLE:
     ``(cell, zone_arr)`` where ``zone_arr[pix]`` is the winning zone
     (by the (rank, area, id) argmin, same tie-break as exact
-    assignment) of morton-pixel ``pix``, or -1. All aggregation happens
-    on the zone-dim side — at fact-join time there is nothing left to
-    resolve. Corpus-independent: build once, persist bucketed by
-    ``cell``, reuse for every fact table.
+    assignment) of pixel bit ``pix``, or -1. ``cell`` is the grid's key
+    (the packed tile id on ``MERCATOR``). All aggregation happens on the
+    zone-dim side — at fact-join time there is nothing left to resolve.
+    Corpus-independent: build once, persist bucketed by ``cell``, reuse
+    for every fact table.
 
     ``exact=True`` builds the STABILITY-aware LUT: a pixel is stable
     iff every zone whose bbox touches the pixel rect fully covers it —
@@ -540,14 +503,11 @@ def zone_pixel_lut(zones: DataFrame, res: int, exact: bool = False) -> DataFrame
     are refined by the exact kernel in ``assign_zones_raster``; pixels
     no zone touches stay -1 (exactly unassigned)."""
     return _fold_pixel_lut(
-        rasterize_zone_bitsets(zones, res), exact, {"lut_res": res}
+        rasterize_zone_bitsets(zones, res, grid), exact, res, grid
     )
 
 
-MERCATOR_MAX_LAT = 85.05112878
-
-
-def _check_lut_mode(lut, exact, fn_name, grid_key, grid_val):
+def _check_lut_mode(lut, exact, grid_key, grid_val):
     """Validate a caller-supplied LUT's build metadata against the
     assignment's flags: build mode (an exact-built LUT under exact=False
     would leak the -2 boundary sentinel as a zone_id; a center-only LUT
@@ -560,8 +520,9 @@ def _check_lut_mode(lut, exact, fn_name, grid_key, grid_val):
     if declared is None:
         if exact:
             raise ValueError(
-                f"{fn_name}(exact=True) needs a LUT built with exact=True; "
-                "the supplied LUT carries no lut_exact build-mode metadata"
+                "assign_zones_raster(exact=True) needs a LUT built with "
+                "exact=True; the supplied LUT carries no lut_exact "
+                "build-mode metadata"
             )
     elif bool(declared) != exact:
         raise ValueError(
@@ -578,58 +539,6 @@ def _check_lut_mode(lut, exact, fn_name, grid_key, grid_val):
     return declared
 
 
-def _finish_raster_assign(
-    out: DataFrame,
-    zones: DataFrame | None,
-    exact: bool,
-    declared,
-    out_of_domain,
-    lon_col: str,
-    lat_col: str,
-    id_col: str,
-    strategy: str,
-    broadcast_budget_bytes: int | None,
-) -> DataFrame:
-    """Shared tail of both raster assigns: sentinel hygiene for
-    unverifiable LUTs; in exact mode, route boundary pixels AND points
-    beyond the grid's projection domain (whose clamped edge pixel may be
-    stable but wrong for them) through the exact kernel, honoring the
-    caller's strategy/budget (ADVICE r3)."""
-    if not exact:
-        if declared is None:
-            # unverifiable hand-built LUT: never leak the -2 boundary
-            # sentinel to callers as a zone id
-            out = out.withColumn(
-                "zone_id",
-                F.when(F.col("zone_id") == -2, F.lit(-1)).otherwise(
-                    F.col("zone_id")
-                ),
-            )
-        return out
-    if out_of_domain is not None:
-        out = out.withColumn(
-            "zone_id",
-            F.when(out_of_domain, F.lit(-2)).otherwise(F.col("zone_id")),
-        )
-    from cosmospark.assign import assign_zones
-
-    resolved = out.filter(F.col("zone_id") != -2)
-    boundary = out.filter(F.col("zone_id") == -2).drop("zone_id")
-    kw = {}
-    if broadcast_budget_bytes is not None:
-        kw["broadcast_budget_bytes"] = broadcast_budget_bytes
-    refined = assign_zones(
-        boundary,
-        zones,
-        lon_col=lon_col,
-        lat_col=lat_col,
-        strategy=strategy,
-        id_col=id_col,
-        **kw,
-    )
-    return resolved.unionByName(refined)
-
-
 def assign_zones_raster(
     points: DataFrame,
     zones: DataFrame | None,
@@ -642,15 +551,18 @@ def assign_zones_raster(
     strategy: str = "auto",
     broadcast_budget_bytes: int | None = None,
     n_salt: int | None = None,
+    grid: Grid = QUADKEY,
 ) -> DataFrame:
-    """PIXEL-APPROXIMATE zone assignment with ZERO Python and ZERO
-    shuffle on the fact path: the zone dim folds into a per-cell pixel
-    LUT (``zone_pixel_lut`` — rank/area argmin pre-resolved zone-side),
-    then the 10^12-row side is Morton encode at res+3, ONE equi-join on
-    the res-cell, and an ``element_at`` — all whole-stage codegen. Each
-    point gets the zone of its containing pixel's CENTER (half-pixel
-    boundary error: 360°/(2^res·8) per axis); the exact paths are
-    ``assign_zones(strategy='broadcast'|'partitioned')``.
+    """PIXEL-APPROXIMATE zone assignment with no shuffle on the fact
+    path: the zone dim folds into a per-cell pixel LUT
+    (``zone_pixel_lut`` — rank/area argmin pre-resolved zone-side), then
+    the 10^12-row side is the grid's res+3 encode (``_cell``/``_pix``),
+    ONE equi-join on the res-cell, and an ``element_at``. On ``QUADKEY``
+    the encode is a Morton Column, so the whole fact side is
+    whole-stage codegen with ZERO Python; on ``MERCATOR`` it is one
+    narrow Arrow ``tile_xy`` pass. Each point gets the zone of its
+    containing pixel's CENTER (half-pixel boundary error); the exact
+    paths are ``assign_zones(strategy='broadcast'|'partitioned')``.
 
     Pass a persisted ``lut`` to amortize the rasterization across fact
     tables; at planet scale store it bucketed by ``cell`` so the join
@@ -661,7 +573,8 @@ def assign_zones_raster(
     stability marking) answers every point in a stable pixel directly,
     and only points in boundary pixels (sentinel -2 — a
     perimeter-scale fraction at fine ``res``) run the exact PIP kernel
-    via the fallback strategy."""
+    via the fallback strategy, honoring the caller's strategy/budget
+    (ADVICE r3)."""
     declared: bool | None = exact
     if zones is None and (lut is None or exact):
         raise ValueError(
@@ -670,15 +583,10 @@ def assign_zones_raster(
             "geometry for boundary refinement"
         )
     if lut is None:
-        lut = zone_pixel_lut(zones, res, exact=exact)
+        lut = zone_pixel_lut(zones, res, exact=exact, grid=grid)
     else:
-        declared = _check_lut_mode(
-            lut, exact, "assign_zones_raster", "lut_res", res
-        )
-    fine = cells.col_cell_encode(F.col(lon_col), F.col(lat_col), res + 3)
-    enc = points.withColumn("_cell", F.shiftright(fine, 6)).withColumn(
-        "_pix", fine.bitwiseAND(F.lit(63)).cast("int")
-    )
+        declared = _check_lut_mode(lut, exact, grid.lut_key, res)
+    enc = grid.encode_facts(points, lon_col, lat_col, res)
     lut_keyed = lut.withColumnRenamed("cell", "_cell")
     join_keys = ["_cell"]
     if n_salt and n_salt > 1:
@@ -710,346 +618,46 @@ def assign_zones_raster(
         )
         .drop("_cell", "_pix", "zone_arr", "_salt")
     )
-    # invalid coordinates clamp into edge cells; exact mode must not let
-    # a stable edge pixel answer for them
-    oob = (
-        (F.col(lat_col) > 90.0)
-        | (F.col(lat_col) < -90.0)
-        | (F.col(lon_col) > 180.0)
-        | (F.col(lon_col) < -180.0)
-    )
-    return _finish_raster_assign(
-        out, zones, exact, declared, oob,
-        lon_col, lat_col, id_col, strategy, broadcast_budget_bytes,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Mercator tile-pyramid LUT leg (VERDICT r3 #8): the same zero-shuffle
-# fact join as the quadkey LUT, but keyed on z/x/y web-mercator tiles —
-# "assign each image to its enclosing zone's tile pyramid". Pixels are
-# the 8×8 sub-tiles at zoom z+3, indexed ROW-MAJOR within the tile
-# ((y3 & 7) * 8 + (x3 & 7)), derivable on the fact side from one
-# tile_xy(z+3) evaluation.
-
-
-def _inv_mercator(yf: np.ndarray) -> np.ndarray:
-    """Fractional mercator y → latitude. sinh is spelled out as
-    (exp(t) - exp(-t)) / 2 so the DuckDB oracle (no sinh built-in in
-    this environment) evaluates the IDENTICAL expression tree."""
-    t = np.pi * (1.0 - 2.0 * yf)
-    return np.degrees(np.arctan((np.exp(t) - np.exp(-t)) / 2.0))
-
-
-def _tile_bounds(tx: np.ndarray, ty: np.ndarray, z: int):
-    """(minx, miny, maxx, maxy) of mercator tiles; y grows southward so
-    miny comes from ty+1."""
-    n = float(1 << z)
-    minx = -180.0 + tx * 360.0 / n
-    maxx = -180.0 + (tx + 1) * 360.0 / n
-    maxy = _inv_mercator(ty / n)
-    miny = _inv_mercator((ty + 1) / n)
-    return minx, miny, maxx, maxy
-
-
-def _tile_coarse_cover(
-    rr, z: int, stats: dict | None = None
-) -> tuple[list[tuple[np.ndarray, np.ndarray, int]], np.ndarray, np.ndarray]:
-    """Mercator analog of ``_coarse_cover``: coarse→fine FULL/EMPTY/
-    BOUNDARY descent over z/x/y tiles → (full tiles grouped by the zoom
-    they were proven at, boundary tx, boundary ty). FULL interiors stay
-    UNEXPANDED — memory here is O(boundary frontier)."""
-    minx, miny, maxx, maxy = geom.bbox(rr)
-
-    def _tiles_at(zz):
-        tx0, ty1 = cells.tile_xy(np.array([minx]), np.array([miny]), zz)
-        tx1, ty0 = cells.tile_xy(np.array([maxx]), np.array([maxy]), zz)
-        return tx0[0], tx1[0], ty0[0], ty1[0]
-
-    z0 = z
-    while z0 > 1:
-        tx0, tx1, ty0, ty1 = _tiles_at(z0)
-        if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) <= _START_CELLS:
-            break
-        z0 -= 1
-    tx0, tx1, ty0, ty1 = _tiles_at(z0)
-    gx, gy = np.meshgrid(
-        np.arange(tx0, tx1 + 1, dtype=np.int64),
-        np.arange(ty0, ty1 + 1, dtype=np.int64),
-        indexing="ij",
-    )
-    cx, cy = gx.ravel(), gy.ravel()
-    full_groups: list[tuple[np.ndarray, np.ndarray, int]] = []
-    bx = by = np.empty(0, dtype=np.int64)
-    r = z0
-    while len(cx):
-        cls = geom.rects_classify(*_tile_bounds(cx, cy, r), rr)
-        if stats is not None:
-            stats["classify_calls"] = stats.get("classify_calls", 0) + 1
-            stats["cells_classified"] = stats.get("cells_classified", 0) + len(cx)
-        fx, fy = cx[cls == 1], cy[cls == 1]
-        if len(fx):
-            full_groups.append((fx, fy, r))
-        if r == z:
-            bx, by = cx[cls == 2], cy[cls == 2]
-            break
-        cx, cy = cx[cls == 2], cy[cls == 2]
-        two = np.arange(2, dtype=np.int64)
-        nx = ((cx[:, None] << 1) + two[None, :])[:, :, None]
-        ny = ((cy[:, None] << 1) + two[None, :])[:, None, :]
-        cx = np.broadcast_to(nx, (len(cx), 2, 2)).ravel()
-        cy = np.broadcast_to(ny, (len(cy), 2, 2)).ravel()
-        r += 1
-    return full_groups, bx, by
-
-
-def _iter_full_tiles(
-    full_groups: list[tuple[np.ndarray, np.ndarray, int]], z: int, step: int
-) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """Expand coarse FULL tiles to zoom-z (tx, ty) chunks of ≤ ~step
-    tiles — the mercator twin of ``_iter_full_cells`` (ADVICE r4: never
-    materialize a continent's interior)."""
-    for fx, fy, r in full_groups:
-        k = z - r
-        side = np.int64(1) << k
-        per = int(side) * int(side)
-        if per >= step:
-            for cx, cy in zip(fx, fy):
-                basex, basey = np.int64(cx) << k, np.int64(cy) << k
-                for s in range(0, per, step):
-                    idx = np.arange(s, min(per, s + step), dtype=np.int64)
-                    yield basex + idx // side, basey + idx % side
-        else:
-            g = max(1, step // per)
-            off = np.arange(int(side), dtype=np.int64)
-            for s in range(0, len(fx), g):
-                ox = (fx[s : s + g][:, None] << k) + off[None, :]
-                oy = (fy[s : s + g][:, None] << k) + off[None, :]
-                gx2 = np.repeat(ox[:, :, None], int(side), axis=2)
-                gy2 = np.repeat(oy[:, None, :], int(side), axis=1)
-                yield gx2.ravel(), gy2.ravel()
-
-
-def tile_raster_cover(
-    rr, z: int, stats: dict | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """→ (full_tx, full_ty, bnd_tx, bnd_ty) at zoom ``z`` — the mercator
-    analog of ``zone_raster_cover`` (same FULL/EMPTY/BOUNDARY descent,
-    tile children are the 2×2 subdivision). Eager convenience wrapper:
-    peak memory O(interior tiles); the streaming consumers go through
-    ``_tile_coarse_cover`` + ``_iter_full_tiles`` and never hold the
-    full interior."""
-    full_groups, bx, by = _tile_coarse_cover(rr, z, stats)
-    xs, ys = [], []
-    for cx, cy in _iter_full_tiles(full_groups, z, 1 << 20):
-        xs.append(cx)
-        ys.append(cy)
-    fxa = np.concatenate(xs) if xs else np.empty(0, dtype=np.int64)
-    fya = np.concatenate(ys) if ys else np.empty(0, dtype=np.int64)
-    return fxa, fya, bx, by
-
-
-def _tile_pixel_centers(tx: np.ndarray, ty: np.ndarray, z: int, px: int = 8):
-    """Pixel-center grids for mercator tiles: (ntiles, px, px) lon/lat,
-    row-major (row = southward step). Identical arithmetic to the SQL
-    oracle: cx = -180 + (x3+0.5)*360/n3, cy = inv_mercator((y3+0.5)/n3)."""
-    n = 1 << z
-    off = np.arange(px, dtype=np.float64)
-    x3 = tx[:, None] * px + off[None, :]
-    y3 = ty[:, None] * px + off[None, :]
-    n3f = float(n * px)
-    lon1 = -180.0 + (x3 + 0.5) * 360.0 / n3f
-    lat1 = _inv_mercator((y3 + 0.5) / n3f)
-    lon_c = np.repeat(lon1[:, None, :], px, axis=1)  # rows vary south
-    lat_c = np.repeat(lat1[:, :, None], px, axis=2)
-    return lon_c, lat_c
-
-
-def _zone_tile_bitset_row_batches(
-    zid, rk, area, rr, z: int, max_pixels: int, stats: dict | None = None
-) -> Iterator[list[dict]]:
-    """Mercator analog of ``_zone_bitset_row_batches``; pixel bit index
-    is ROW-MAJOR (y3&7)*8 + (x3&7) — no morton, because the fact side
-    computes (x3, y3) directly from tile_xy at z+3."""
-    px = 8
-    n3f = float((1 << z) * px)
-    pow2 = np.int64(1) << np.arange(64, dtype=np.int64)
-    base = {"zone_id": int(zid), "rank": int(rk), "area": float(area)}
-    key_hi = np.int64(z) << 58
-    full_groups, bx, by = _tile_coarse_cover(rr, z, stats)
-    step = max(1, max_pixels // (px * px))
-    for cx, cy in _iter_full_tiles(full_groups, z, step):
-        keys = key_hi | (cx << 29) | cy
-        yield [
-            dict(base, cell=int(kk), mask_bits=-1, full_bits=-1, touch_bits=-1)
-            for kk in keys
-        ]
-    for s in range(0, len(bx), step):
-        cx, cy = bx[s : s + step], by[s : s + step]
-        if stats is not None:
-            stats["kernel_calls"] = stats.get("kernel_calls", 0) + 1
-        nc = len(cx)
-        lon_c, lat_c = _tile_pixel_centers(cx, cy, z, px)
-        hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(
-            nc, px * px
-        )
-        # pixel rects: lon linear; lat rows span [inv((y3+1)/n3), inv(y3/n3)]
-        off = np.arange(px, dtype=np.float64)
-        x3 = cx[:, None] * px + off[None, :]
-        y3 = cy[:, None] * px + off[None, :]
-        wlon = 360.0 / n3f
-        pminx = np.repeat(
-            (-180.0 + x3 * 360.0 / n3f)[:, None, :], px, axis=1
-        ).ravel()
-        lat_top = np.repeat(_inv_mercator(y3 / n3f)[:, :, None], px, axis=2).ravel()
-        lat_bot = np.repeat(
-            _inv_mercator((y3 + 1) / n3f)[:, :, None], px, axis=2
-        ).ravel()
-        ehit = geom._rect_edge_hits(
-            pminx, lat_bot, pminx + wlon, lat_top, rr
-        ).reshape(nc, px * px)
-        fullv = hit & ~ehit
-        touchv = hit | ehit
-        bits = (hit * pow2[None, :]).sum(axis=1)
-        fbits = (fullv * pow2[None, :]).sum(axis=1)
-        tbits = (touchv * pow2[None, :]).sum(axis=1)
-        keys = key_hi | (cx << 29) | cy
-        out = []
-        for ci in np.nonzero(bits | tbits)[0]:
-            out.append(
-                dict(
-                    base,
-                    cell=int(keys[ci]),
-                    mask_bits=int(bits[ci]),
-                    full_bits=int(fbits[ci]),
-                    touch_bits=int(tbits[ci]),
-                )
+    if not exact:
+        if declared is None:
+            # unverifiable hand-built LUT: never leak the -2 boundary
+            # sentinel to callers as a zone id
+            out = out.withColumn(
+                "zone_id",
+                F.when(F.col("zone_id") == -2, F.lit(-1)).otherwise(
+                    F.col("zone_id")
+                ),
             )
-        yield out
-
-
-def rasterize_zone_bitsets_tiles(zones: DataFrame, z: int) -> DataFrame:
-    """Per (zone, z/x/y tile) 64-pixel bitsets on the mercator pyramid —
-    the joinable encoding behind ``tile_pixel_lut`` (same planet-safe
-    descent + chunking as the quadkey variant)."""
-    from cosmospark.hierarchy import type_rank_col
-    from cosmospark.ztypes import TYPE_RANK
-
-    rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(len(TYPE_RANK)))
-    zz = zones.select(
-        F.col("id").alias("zone_id"), rank.cast("int").alias("rank"), "rings"
-    )
-    max_pixels = _default_max_pixels()
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "zone_id", "rank", "area", "cell",
-            "mask_bits", "full_bits", "touch_bits",
-        ]
-        for pdf in batches:
-            buf: list[dict] = []
-            for zid, rk, rrows in zip(pdf["zone_id"], pdf["rank"], pdf["rings"]):
-                if rrows is None or len(rrows) == 0:
-                    continue
-                rr = geom.rows_to_rings(rrows)
-                area = geom.area(rr)
-                for rows in _zone_tile_bitset_row_batches(
-                    zid, rk, area, rr, z, max_pixels
-                ):
-                    buf.extend(rows)
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-            yield pd.DataFrame(buf, columns=cols)
-
-    return zz.mapInPandas(_run, _BITSET_SCHEMA)
-
-
-def tile_pixel_lut(zones: DataFrame, z: int, exact: bool = False) -> DataFrame:
-    """``zone_pixel_lut`` on the mercator tile pyramid: (tile_id,
-    zone_arr[64]) with the same argmin/stability semantics and build-mode
-    metadata. Column stays named ``cell`` (it carries the packed tile
-    id) so ``_fold_pixel_lut``/persistence tooling is shared."""
-    return _fold_pixel_lut(
-        rasterize_zone_bitsets_tiles(zones, z), exact, {"lut_z": z}
-    )
-
-
-_TILE_PIX_SCHEMA_EXTRA = [
-    T.StructField("_cell", T.LongType()),
-    T.StructField("_pix", T.IntegerType()),
-]
-
-
-def assign_zones_tiles_raster(
-    points: DataFrame,
-    zones: DataFrame | None,
-    z: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    id_col: str = "pid",
-    lut: DataFrame | None = None,
-    exact: bool = False,
-    strategy: str = "auto",
-    broadcast_budget_bytes: int | None = None,
-) -> DataFrame:
-    """Tile-pyramid raster assignment: ONE narrow Arrow pass computes
-    the zoom-z tile and the 8×8 sub-tile pixel index (tile_xy at z+3 —
-    the only Python on the fact path, and it rides the same pass that
-    tile-encodes facts anyway), then an equi-join on the tile id + an
-    ``element_at`` resolves the zone. ``exact=True`` refines boundary
-    pixels exactly as ``assign_zones_raster`` does."""
-    declared: bool | None = exact
-    if zones is None and (lut is None or exact):
-        raise ValueError(
-            "zones may be None only with a prebuilt non-exact LUT (the "
-            "streaming stream-static shape); exact mode needs the zone "
-            "geometry for boundary refinement"
-        )
-    if lut is None:
-        lut = tile_pixel_lut(zones, z, exact=exact)
-    else:
-        declared = _check_lut_mode(
-            lut, exact, "assign_zones_tiles_raster", "lut_z", z
-        )
-
-    out_schema = T.StructType(points.schema.fields + _TILE_PIX_SCHEMA_EXTRA)
-    key_hi = z << 58
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            x3, y3 = cells.tile_xy(lon, lat, z + 3)
-            pdf["_cell"] = key_hi | ((x3 >> 3) << 29) | (y3 >> 3)
-            pdf["_pix"] = ((y3 & 7) * 8 + (x3 & 7)).astype(np.int32)
-            yield pdf
-
-    enc = points.mapInPandas(_enc, out_schema)
-    out = (
-        enc.join(lut.withColumnRenamed("cell", "_cell"), "_cell", "left")
-        .withColumn(
-            "zone_id",
-            F.coalesce(F.expr("element_at(zone_arr, _pix + 1)"), F.lit(-1)).cast(
-                "long"
-            ),
-        )
-        .drop("_cell", "_pix", "zone_arr")
-    )
-    # tile_xy CLAMPS latitude to the mercator domain (±85.05°): a point
-    # beyond it lands in the top/bottom pixel row, whose stable winner
-    # is wrong for it — exact mode routes such points to the exact
-    # kernel (which tests the real coordinates against real geometry)
+        return out
+    # coordinates beyond the grid's domain clamp into edge pixels, whose
+    # stable winner is wrong for them: route them to the exact kernel
+    # too (it tests the real coordinates against real geometry)
     oob = (
-        (F.col(lat_col) > MERCATOR_MAX_LAT)
-        | (F.col(lat_col) < -MERCATOR_MAX_LAT)
+        (F.col(lat_col) > grid.max_lat)
+        | (F.col(lat_col) < -grid.max_lat)
         | (F.col(lon_col) > 180.0)
         | (F.col(lon_col) < -180.0)
     )
-    return _finish_raster_assign(
-        out, zones, exact, declared, oob,
-        lon_col, lat_col, id_col, strategy, broadcast_budget_bytes,
+    out = out.withColumn(
+        "zone_id", F.when(oob, F.lit(-2)).otherwise(F.col("zone_id"))
     )
+    from cosmospark.assign import assign_zones
+
+    resolved = out.filter(F.col("zone_id") != -2)
+    boundary = out.filter(F.col("zone_id") == -2).drop("zone_id")
+    kw = {}
+    if broadcast_budget_bytes is not None:
+        kw["broadcast_budget_bytes"] = broadcast_budget_bytes
+    refined = assign_zones(
+        boundary,
+        zones,
+        lon_col=lon_col,
+        lat_col=lat_col,
+        strategy=strategy,
+        id_col=id_col,
+        **kw,
+    )
+    return resolved.unionByName(refined)
 
 
 # ---------------------------------------------------------------------------
@@ -1068,17 +676,15 @@ def incremental_lut_update(
     removed_zone_ids: list[int],
     res: int,
     exact: bool = False,
-    grid: str = "cells",
+    grid: Grid = QUADKEY,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Apply a zone-dim edit to a persisted bitset table.
 
     ``changed_zones``: zones added or modified (full new rows, reference
     zone schema); ``removed_zone_ids``: ids to drop (a modified zone's
     id may appear in both — its old rows are replaced either way).
-    ``grid``: ``"cells"`` (quadkey, ``res`` is the cell resolution) or
-    ``"tiles"`` (mercator pyramid, ``res`` is the zoom) — the edit
-    algebra is grid-agnostic because both LUTs key on one packed
-    64-bit ``cell`` column.
+    The edit algebra is grid-agnostic because every grid's LUT keys on
+    one packed 64-bit ``cell`` column.
 
     Returns ``(new_bitsets, affected_cells, lut_patch)``:
       * ``new_bitsets``  — the updated maintenance table;
@@ -1088,13 +694,10 @@ def incremental_lut_update(
         (a cell whose coverage vanished is absent: delete it).
     Apply with ``apply_lut_patch``. Every step is a key join on
     cell/zone_id — bucketed storage keeps them co-located."""
-    if grid not in ("cells", "tiles"):
-        raise ValueError(f"unknown grid {grid!r} (expected 'cells' or 'tiles')")
-    raster_fn = (
-        rasterize_zone_bitsets if grid == "cells" else rasterize_zone_bitsets_tiles
-    )
     changed_new = (
-        raster_fn(changed_zones, res) if changed_zones is not None else None
+        rasterize_zone_bitsets(changed_zones, res, grid)
+        if changed_zones is not None
+        else None
     )
     touched_ids = list(removed_zone_ids)
     if changed_zones is not None:
@@ -1111,9 +714,7 @@ def incremental_lut_update(
         affected = affected.unionByName(changed_new.select("cell"))
     affected_cells = affected.distinct().localCheckpoint(eager=True)
     lut_patch = _fold_pixel_lut(
-        new_bitsets.join(affected_cells, "cell", "left_semi"),
-        exact,
-        {"lut_res": res} if grid == "cells" else {"lut_z": res},
+        new_bitsets.join(affected_cells, "cell", "left_semi"), exact, res, grid
     )
     return new_bitsets, affected_cells, lut_patch
 

@@ -74,12 +74,8 @@ def main() -> None:
             encode_and_assign,
             encode_points,
         )
-        from cosmospark.raster import (
-            assign_zones_raster,
-            assign_zones_tiles_raster,
-            tile_pixel_lut,
-            zone_pixel_lut,
-        )
+        from cosmospark.cells import MERCATOR
+        from cosmospark.raster import assign_zones_raster, zone_pixel_lut
 
         out = {}
         out["pip_assign"] = lambda: (
@@ -114,9 +110,9 @@ def main() -> None:
             .filter(F.col("zone_id") >= 0)
             .count
         )
-        lut_t = tile_pixel_lut(zones, z=9).localCheckpoint()
+        lut_t = zone_pixel_lut(zones, res=9, grid=MERCATOR).localCheckpoint()
         out["pip_assign_raster_tile"] = (
-            assign_zones_tiles_raster(pts, zones, z=9, lut=lut_t)
+            assign_zones_raster(pts, zones, res=9, lut=lut_t, grid=MERCATOR)
             .filter(F.col("zone_id") >= 0)
             .count
         )

@@ -2,6 +2,7 @@
 and a long chain (exercises multi-round convergence)."""
 
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 from cosmospark.graph import connected_components
 
@@ -32,6 +33,80 @@ def test_no_edges(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
+# Reference forms of the star round. connected_components runs the
+# window form (_small_star∘_large_star) or the oriented fused round;
+# these symmetrized broadcast forms (r7) are what the oriented round was
+# derived from, kept here so the agreement test checks all four.
+
+
+def _large_star_bc(e: DataFrame) -> DataFrame:
+    """Broadcast-star large star (r7): the per-node neighborhood min is
+    NODE-scale, not edge-scale — a map-side-combined groupBy reduces
+    the edge set to one (u, min) row per node before any exchange, and
+    the tiny min table broadcasts back onto the unshuffled edges. The
+    window form exchanges+sorts the full symmetrized edge multiset
+    (2|E| rows); this form's only exchange carries ≤|V| aggregated
+    rows. Identical output multiset modulo row order (same m per u)."""
+    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    m = sym.groupBy("u").agg(F.min("v").alias("_mv")).select(
+        "u", F.least("u", "_mv").alias("m")
+    )
+    return (
+        sym.join(F.broadcast(m), "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+
+
+def _small_star_bc(e: DataFrame) -> DataFrame:
+    """Broadcast-star small star (r7) — see _large_star_bc. The selfs
+    leg emits one row per NODE instead of one per edge; the round's
+    distinct() collapses the window form's per-edge duplicates to the
+    same set, so the checkpointed edge SET is identical."""
+    o = e.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    )
+    m = o.groupBy("u").agg(F.min("v").alias("m"))
+    children = (
+        o.join(F.broadcast(m), "u")
+        .filter(F.col("v") != F.col("m"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+    selfs = m.select("u", F.col("m").alias("v"))
+    return children.unionByName(selfs)
+
+
+def _star_round_bc(e: DataFrame) -> DataFrame:
+    """Fused broadcast-star round (r7): small_star_bc∘large_star_bc
+    with one fewer pass over the edge multiset. Large-star's output
+    edges are (v, m(u)) for each symmetrized (u,v) with v > u, and they
+    are ALREADY oriented hi→lo (m(u) ≤ u < v), so small-star's per-node
+    min is m2(v) = min over those rows of m(u) — computable directly
+    from sym ⋈ m without materializing the intermediate edge list; the
+    children/selfs legs then need only one more sym ⋈ m ⋈ m2 pass.
+    Emits the identical row multiset as the two-step composition
+    (children: (m(u), m2(v)) where m(u) != m2(v); selfs: one (v, m2(v))
+    per node v), so the round's distinct() yields the same edge set."""
+    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    m = sym.groupBy("u").agg(F.min("v").alias("_mv")).select(
+        "u", F.least("u", "_mv").alias("m")
+    )
+    # large-star rows, not materialized: (v, mu) per sym row with v > u
+    lrows = (
+        sym.join(F.broadcast(m), "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("lv"), F.col("m").alias("mu"))
+    )
+    m2 = lrows.groupBy("lv").agg(F.min("mu").alias("m2"))
+    children = (
+        lrows.join(F.broadcast(m2), "lv")
+        .filter(F.col("mu") != F.col("m2"))
+        .select(F.col("mu").alias("u"), F.col("m2").alias("v"))
+    )
+    selfs = m2.select(F.col("lv").alias("u"), F.col("m2").alias("v"))
+    return children.unionByName(selfs)
+
+
 def test_star_round_implementations_agree(spark):
     """r7: the three star-round forms — window (_small_star∘_large_star),
     broadcast two-step (_small_star_bc∘_large_star_bc), and the fused
@@ -40,15 +115,7 @@ def test_star_round_implementations_agree(spark):
     budget; equal per-round sets ⇒ equal fixpoints and labels)."""
     import random
 
-    from cosmospark.graph import (
-        _large_star,
-        _large_star_bc,
-        _small_star,
-        _small_star_bc,
-        _star_round_bc,
-        _star_round_oriented,
-    )
-    from pyspark.sql import functions as F
+    from cosmospark.graph import _large_star, _small_star, _star_round_oriented
 
     rng = random.Random(13)
     for trial in range(3):

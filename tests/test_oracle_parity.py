@@ -137,3 +137,38 @@ def test_semdedup_cluster_skew(spark):
     mx = max(r["count"] for r in counts)
     assert len(counts) == k, "every Lloyd cluster must be non-empty"
     assert mx / total <= 3.0 / k, f"max cluster {mx}/{total} breaches 3x uniform at K={k}"
+
+
+def test_text_fingerprints_on_hostile_documents(spark, tmp_path):
+    """NULL text, empty text, a one-token document and an exact duplicate:
+    q_doc_fingerprint and q_simhash must still match their oracles row
+    for row (the sf fixtures hold no NULL or empty text)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = [None, "", "spark", "the fast key", "the fast key"]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": ["en"] * len(texts),
+                "source": ["src0"] * len(texts),
+                "n_chars": pa.array(
+                    [len(t) if t is not None else None for t in texts], pa.int64()
+                ),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    c = duckdb.connect()
+    c.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    for name, q, oracle in [
+        ("doc_fingerprint", Q.q_doc_fingerprint, Q.SQL_FINGERPRINT),
+        ("simhash", Q.q_simhash, Q.sql_simhash(str(tmp_path))),
+    ]:
+        got = normalize(q(spark, str(tmp_path)).toPandas())
+        want = normalize(c.sql(oracle).df())
+        pd.testing.assert_frame_equal(
+            got, want, check_dtype=False, check_exact=True, obj=name
+        )

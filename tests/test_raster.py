@@ -1,17 +1,21 @@
 """Raster ↔ vector tiling invariants: mask coverage vs polygon area,
-FULL-cell all-ones masks, mercator-tile variant, and the exact
-raster→vector→raster round trip."""
+FULL-cell all-ones masks, both grids (quadkey and mercator tiles), and
+the exact raster→vector→raster round trip."""
 
 import numpy as np
 import pytest
 
 from cosmospark import cells, geom
+from cosmospark.cells import MERCATOR, QUADKEY
 from cosmospark.raster import (
     boxes_to_mask,
     mask_to_boxes,
-    rasterize_zones_cells,
-    rasterize_zones_tiles,
+    rasterize_zones,
     unpack_mask,
+)
+
+both_grids = pytest.mark.parametrize(
+    "grid", [QUADKEY, MERCATOR], ids=lambda g: g.name
 )
 
 
@@ -46,7 +50,7 @@ def rect_zone_df(spark):
 def test_rasterize_cells_area_and_full(rect_zone_df):
     px = 8
     res = 4
-    out = rasterize_zones_cells(rect_zone_df, res=res, px=px).collect()
+    out = rasterize_zones(rect_zone_df, res=res, px=px).collect()
     # res 4 → 22.5°(lon)/11.25°(lat) cells; the [0,90]×[0,45] rect spans
     # exactly 4×4 grid-aligned cells, every one entirely covered
     assert len(out) == 16
@@ -71,7 +75,7 @@ def test_rasterize_cells_area_and_full(rect_zone_df):
 def test_rasterize_partial_cells(spark, rect_zone_df):
     # res 2 → 90°×45° cells: the rect covers exactly ONE full cell at
     # (x=2,y=2) [0..90 lon, 0..45 lat]
-    out = rasterize_zones_cells(rect_zone_df, res=2, px=8).collect()
+    out = rasterize_zones(rect_zone_df, res=2, px=8).collect()
     assert len(out) == 1
     assert out[0]["n_inside"] == 64
     cx, cy = cells.morton_deinterleave(np.array([out[0]["cell"]]), 2)
@@ -80,10 +84,10 @@ def test_rasterize_partial_cells(spark, rect_zone_df):
 
 def test_rasterize_tiles_mercator(rect_zone_df):
     z, px = 3, 16
-    out = rasterize_zones_tiles(rect_zone_df, z=z, px=px).collect()
+    out = rasterize_zones(rect_zone_df, res=z, px=px, grid=MERCATOR).collect()
     assert out, "no tiles covered"
     for r in out:
-        tz, tx, ty = cells.tile_decode(r["tile_id"])
+        tz, tx, ty = cells.tile_decode(r["cell"])
         assert tz == z
         m = unpack_mask(bytes(r["mask"]), px)
         assert m.sum() == r["n_inside"] > 0
@@ -263,22 +267,19 @@ def _star_rings(n=24, r0=20.0, r1=45.0, cx=10.0, cy=5.0):
     return geom.rows_to_rings([{"poly": 0, "ring": 0, "xs": xs, "ys": ys}])
 
 
-def test_hierarchical_cover_sound_vs_pixel_oracle():
+@both_grids
+def test_hierarchical_cover_sound_vs_pixel_oracle(grid):
     """zone_raster_cover's FULL cells must have every pixel center
     inside; cells outside FULL∪BOUNDARY must have none (soundness of
     the EMPTY/FULL shortcuts — BOUNDARY cells go through the kernel
     anyway)."""
-    import numpy as np
-
-    from cosmospark import cells, geom
     from cosmospark.raster import _pixel_centers, zone_raster_cover
 
     rr = _star_rings()
     res = 5
-    full, bnd = zone_raster_cover(rr, res)
-    minx, miny, maxx, maxy = geom.bbox(rr)
-    cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-    lon_c, lat_c = _pixel_centers(cc, res, 8)
+    full, bnd = zone_raster_cover(rr, res, grid)
+    cc = grid.bbox_cells(*geom.bbox(rr), res)
+    lon_c, lat_c = _pixel_centers(grid, cc, res, 8)
     hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(len(cc), 64)
     full_s, bnd_s = set(full.tolist()), set(bnd.tolist())
     assert full_s.isdisjoint(bnd_s)
@@ -291,11 +292,11 @@ def test_hierarchical_cover_sound_vs_pixel_oracle():
     assert len(full) > 0 and len(bnd) > 0
 
 
-def test_planet_zone_bounded_kernel_chunks():
+@both_grids
+def test_planet_zone_bounded_kernel_chunks(grid):
     """A zone whose bbox spans ≥ 90° at res 9 must rasterize through
     MULTIPLE bounded kernel calls (no single multi-GB allocation), and
     the descent must classify FAR fewer cells than the bbox cover."""
-    from cosmospark import geom
     from cosmospark.raster import _bbox_cell_count, _zone_bitset_row_batches
 
     rr = _star_rings(n=36, r0=40.0, r1=60.0, cx=0.0, cy=0.0)  # 120° across
@@ -306,7 +307,7 @@ def test_planet_zone_bounded_kernel_chunks():
     n_rows = 0
     max_batch = 0
     for rows in _zone_bitset_row_batches(
-        1, 0, 1.0, rr, res, max_pixels=1 << 16, stats=stats
+        1, 0, 1.0, rr, res, grid, max_pixels=1 << 16, stats=stats
     ):
         n_rows += len(rows)
         max_batch = max(max_batch, len(rows))
@@ -315,7 +316,7 @@ def test_planet_zone_bounded_kernel_chunks():
     # bounded; and hierarchical descent touched a small multiple of the
     # PERIMETER, not the bbox area
     assert max_batch <= (1 << 16) // 64
-    bbox_cells = _bbox_cell_count(minx, miny, maxx, maxy, res)
+    bbox_cells = _bbox_cell_count(grid, minx, miny, maxx, maxy, res)
     assert stats["cells_classified"] < bbox_cells / 4, (
         stats["cells_classified"],
         bbox_cells,
@@ -323,12 +324,10 @@ def test_planet_zone_bounded_kernel_chunks():
     assert n_rows > 1000  # the zone did rasterize
 
 
-def test_hierarchical_mask_rows_match_single_level_oracle():
+@both_grids
+def test_hierarchical_mask_rows_match_single_level_oracle(grid):
     """Row-for-row equality of the descent path against a brute-force
     single-level rasterization (every bbox cell through the kernel)."""
-    import numpy as np
-
-    from cosmospark import cells, geom
     from cosmospark.raster import (
         _mask_rows,
         _pixel_centers,
@@ -338,15 +337,14 @@ def test_hierarchical_mask_rows_match_single_level_oracle():
     rr = _star_rings()
     res, px = 4, 8
     got = {}
-    for rows in _zone_mask_row_batches(7, rr, res, px, max_pixels=1 << 12):
+    for rows in _zone_mask_row_batches(7, rr, res, px, grid, max_pixels=1 << 12):
         for r in rows:
             got[r["cell"]] = (r["mask"], r["n_inside"])
-    minx, miny, maxx, maxy = geom.bbox(rr)
-    cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-    lon_c, lat_c = _pixel_centers(cc, res, px)
+    cc = grid.bbox_cells(*geom.bbox(rr), res)
+    lon_c, lat_c = _pixel_centers(grid, cc, res, px)
     want = {
         r["cell"]: (r["mask"], r["n_inside"])
-        for r in _mask_rows(7, rr, lon_c, lat_c, cc)
+        for r in _mask_rows(7, rr, lon_c, lat_c, grid.key(cc, res))
     }
     assert got == want
 
@@ -378,14 +376,14 @@ def test_lut_build_mode_validated_against_exact_flag(spark):
 
 
 def test_tile_raster_exact_equals_broadcast_everywhere(spark):
-    """assign_zones_tiles_raster(exact=True) must be bit-identical to
+    """assign_zones_raster(grid=MERCATOR, exact=True) must be bit-identical to
     the broadcast PIP kernel on random (non-lattice) points — same
     guarantee as the quadkey exact path, now on the mercator pyramid."""
     import pyspark.sql.functions as F
 
     from cosmospark.assign import assign_zones
     from cosmospark.queries import _lux_typed_zones
-    from cosmospark.raster import assign_zones_tiles_raster
+    from cosmospark.raster import assign_zones_raster
 
     pts = spark.range(3000).select(
         F.col("id").alias("pid"),
@@ -393,9 +391,9 @@ def test_tile_raster_exact_equals_broadcast_everywhere(spark):
         F.expr("cast(43.5 + (id * 104729 % 1100) / 100.0 as double)").alias("lat"),
     )
     zones = _lux_typed_zones(spark)
-    exact = assign_zones_tiles_raster(pts, zones, z=6, exact=True).select(
-        "pid", "zone_id"
-    )
+    exact = assign_zones_raster(
+        pts, zones, res=6, exact=True, grid=MERCATOR
+    ).select("pid", "zone_id")
     ref = assign_zones(pts, zones).select("pid", F.col("zone_id").alias("zr"))
     assert exact.join(ref, "pid").filter("zone_id != zr").count() == 0
 
@@ -407,49 +405,18 @@ def test_tile_raster_plan_shape(spark):
     import pyspark.sql.functions as F
 
     from cosmospark.queries import _lux_typed_zones
-    from cosmospark.raster import assign_zones_tiles_raster
+    from cosmospark.raster import assign_zones_raster
 
     pts = spark.range(100).select(
         F.col("id").alias("pid"),
         (F.lit(2.0) + F.col("id") / 100.0).alias("lon"),
         (F.lit(44.0) + F.col("id") / 100.0).alias("lat"),
     )
-    df = assign_zones_tiles_raster(pts, _lux_typed_zones(spark), z=6)
+    df = assign_zones_raster(pts, _lux_typed_zones(spark), res=6, grid=MERCATOR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_tile_hierarchical_cover_sound():
-    """Mercator descent soundness: FULL tiles have all pixel centers
-    inside; tiles outside FULL∪BOUNDARY have none."""
-    import numpy as np
-
-    from cosmospark import cells, geom
-    from cosmospark.raster import _tile_pixel_centers, tile_raster_cover
-
-    rr = _star_rings()
-    z = 5
-    fx, fy, bx, by = tile_raster_cover(rr, z)
-    minx, miny, maxx, maxy = geom.bbox(rr)
-    tx0, ty1 = cells.tile_xy(np.array([minx]), np.array([miny]), z)
-    tx1, ty0 = cells.tile_xy(np.array([maxx]), np.array([maxy]), z)
-    gx, gy = np.meshgrid(
-        np.arange(tx0[0], tx1[0] + 1), np.arange(ty0[0], ty1[0] + 1), indexing="ij"
-    )
-    gx, gy = gx.ravel(), gy.ravel()
-    lon_c, lat_c = _tile_pixel_centers(gx, gy, z, 8)
-    hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(len(gx), 64)
-    full_s = set(zip(fx.tolist(), fy.tolist()))
-    bnd_s = set(zip(bx.tolist(), by.tolist()))
-    assert full_s.isdisjoint(bnd_s)
-    for i, t in enumerate(zip(gx.tolist(), gy.tolist())):
-        if t in full_s:
-            assert hit[i].all(), f"FULL tile {t} has an outside pixel"
-        elif t not in bnd_s:
-            assert not hit[i].any(), f"skipped tile {t} has an inside pixel"
-    assert len(full_s) > 0 and len(bnd_s) > 0
 
 
 def test_tile_lut_persisted_bucketed_joins_without_lut_exchange(spark, tmp_path):
@@ -461,10 +428,10 @@ def test_tile_lut_persisted_bucketed_joins_without_lut_exchange(spark, tmp_path)
 
     from cosmospark.bucketing import read_bucketed, write_bucketed
     from cosmospark.queries import _lux_typed_zones
-    from cosmospark.raster import assign_zones_tiles_raster, tile_pixel_lut
+    from cosmospark.raster import assign_zones_raster, zone_pixel_lut
 
     zones = _lux_typed_zones(spark)
-    lut = tile_pixel_lut(zones, z=6)
+    lut = zone_pixel_lut(zones, res=6, grid=MERCATOR)
     write_bucketed(lut, "lut_tiles_t", str(tmp_path / "lut_t"), ["cell"], 8)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -476,12 +443,12 @@ def test_tile_lut_persisted_bucketed_joins_without_lut_exchange(spark, tmp_path)
             (F.col("id") % 130 / 10.0 + 2.0).alias("lon"),
             (F.col("id") % 100 / 10.0 + 44.0).alias("lat"),
         )
-        out = assign_zones_tiles_raster(pts, zones, z=6, lut=lut_b)
+        out = assign_zones_raster(pts, zones, res=6, lut=lut_b, grid=MERCATOR)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount" in plan
         lut_scan_prefix = plan.split("SelectedBucketsCount")[0]
         assert "Exchange" not in lut_scan_prefix.split("Scan parquet")[-1]
-        base = assign_zones_tiles_raster(pts, zones, z=6).select(
+        base = assign_zones_raster(pts, zones, res=6, grid=MERCATOR).select(
             "pid", "zone_id"
         ).collect()
         got = out.select("pid", "zone_id").collect()
@@ -570,7 +537,7 @@ def test_exact_mode_out_of_mercator_domain_points(spark):
     import pyspark.sql.functions as F
 
     from cosmospark.queries import _lux_typed_zones
-    from cosmospark.raster import assign_zones_raster, assign_zones_tiles_raster
+    from cosmospark.raster import assign_zones_raster
 
     zones = _lux_typed_zones(spark)
     pts = spark.createDataFrame(
@@ -579,7 +546,9 @@ def test_exact_mode_out_of_mercator_domain_points(spark):
     )
     got_t = {
         r["pid"]: r["zone_id"]
-        for r in assign_zones_tiles_raster(pts, zones, z=6, exact=True).collect()
+        for r in assign_zones_raster(
+            pts, zones, res=6, exact=True, grid=MERCATOR
+        ).collect()
     }
     assert got_t[1] == -1 and got_t[2] == -1 and got_t[3] == -1
     assert got_t[4] >= 0  # in-domain point inside the lux box still assigns
@@ -597,12 +566,7 @@ def test_lut_grid_mismatch_rejected(spark):
     import pyspark.sql.functions as F
 
     from cosmospark.queries import _lux_typed_zones
-    from cosmospark.raster import (
-        assign_zones_raster,
-        assign_zones_tiles_raster,
-        tile_pixel_lut,
-        zone_pixel_lut,
-    )
+    from cosmospark.raster import assign_zones_raster, zone_pixel_lut
 
     zones = _lux_typed_zones(spark)
     pts = spark.range(5).select(
@@ -613,19 +577,18 @@ def test_lut_grid_mismatch_rejected(spark):
     lut6 = zone_pixel_lut(zones, res=6)
     with pytest.raises(ValueError, match="lut_res=6"):
         assign_zones_raster(pts, zones, res=9, lut=lut6)
-    tlut6 = tile_pixel_lut(zones, z=6)
+    tlut6 = zone_pixel_lut(zones, res=6, grid=MERCATOR)
     with pytest.raises(ValueError, match="lut_z=6"):
-        assign_zones_tiles_raster(pts, zones, z=7, lut=tlut6)
+        assign_zones_raster(pts, zones, res=7, lut=tlut6, grid=MERCATOR)
 
 
-def test_lazy_full_expansion_matches_eager_and_bounds_chunks():
+@both_grids
+def test_lazy_full_expansion_matches_eager_and_bounds_chunks(grid):
     """ADVICE r4: the streaming rasterizers must expand FULL-interior
     cells lazily. The chunked iterator must (a) reproduce the eager
     zone_raster_cover full set exactly, (b) never yield a chunk larger
     than ~step, and (c) keep the descent state coarse (no materialized
     interior inside _coarse_cover's groups)."""
-    import numpy as np
-
     from cosmospark.raster import (
         _coarse_cover,
         _iter_full_cells,
@@ -634,17 +597,17 @@ def test_lazy_full_expansion_matches_eager_and_bounds_chunks():
 
     rr = _star_rings()
     res = 7
-    eager_full, _ = zone_raster_cover(rr, res)
-    groups, _ = _coarse_cover(rr, res)
-    step = 64
-    chunks = list(_iter_full_cells(groups, res, step))
-    assert chunks, "star zone has an interior at res 7"
-    # (b) bounded chunks: a group of coarse cells each expanding to
-    # `per` descendants may overshoot by < per, never by a full interior
-    assert max(len(c) for c in chunks) <= 2 * step
-    # (a) exact same cell set, order-insensitive
-    lazy_full = np.concatenate(chunks)
-    assert sorted(lazy_full.tolist()) == sorted(eager_full.tolist())
+    eager_full, _ = zone_raster_cover(rr, res, grid)
+    groups, _ = _coarse_cover(rr, res, grid)
+    for step in (32, 64):
+        chunks = list(_iter_full_cells(groups, res, step))
+        assert chunks, "star zone has an interior at res 7"
+        # (b) bounded chunks: a group of coarse cells each expanding to
+        # `per` descendants may overshoot by < per, never by a full interior
+        assert max(len(c) for c in chunks) <= 2 * step
+        # (a) exact same cell set, order-insensitive
+        lazy_full = np.concatenate(chunks)
+        assert sorted(lazy_full.tolist()) == sorted(eager_full.tolist())
     # (c) the descent itself holds only coarse/unexpanded cells:
     # strictly fewer stored entries than the expanded interior
     stored = sum(len(g) for g, _r in groups)
@@ -758,36 +721,9 @@ def test_skewed_lut_shuffle_join_aqe_split(spark):
             spark.conf.set(k, v)
 
 
-def test_lazy_tile_expansion_matches_eager():
-    """Mercator twin of the quadkey lazy-expansion test: chunked
-    _iter_full_tiles must reproduce tile_raster_cover's full set exactly
-    with bounded chunk sizes and a coarse (unexpanded) descent state."""
-    import numpy as np
-
-    from cosmospark.raster import (
-        _iter_full_tiles,
-        _tile_coarse_cover,
-        tile_raster_cover,
-    )
-
-    rr = _star_rings()
-    z = 7
-    fx, fy, _, _ = tile_raster_cover(rr, z)
-    groups, _, _ = _tile_coarse_cover(rr, z)
-    step = 32
-    chunks = list(_iter_full_tiles(groups, z, step))
-    assert chunks, "star zone has an interior at z 7"
-    assert max(len(cx) for cx, _cy in chunks) <= 2 * step
-    lazy = {(int(a), int(b)) for cx, cy in chunks for a, b in zip(cx, cy)}
-    eager = {(int(a), int(b)) for a, b in zip(fx, fy)}
-    assert lazy == eager
-    stored = sum(len(g[0]) for g in groups)
-    assert stored < len(fx)
-
-
 def test_incremental_tile_lut_update_equals_full_rebuild(spark):
     """Mercator twin of the cell-LUT incremental test (r5): the same
-    zone-dim edit through incremental_lut_update(grid='tiles') must
+    zone-dim edit through incremental_lut_update(grid=MERCATOR) must
     produce exactly the tile LUT a from-scratch rebuild produces, with
     an edit-local refold."""
     import pyspark.sql.functions as F
@@ -797,8 +733,8 @@ def test_incremental_tile_lut_update_equals_full_rebuild(spark):
     from cosmospark.raster import (
         apply_lut_patch,
         incremental_lut_update,
-        rasterize_zone_bitsets_tiles,
-        tile_pixel_lut,
+        rasterize_zone_bitsets,
+        zone_pixel_lut,
     )
 
     z = 7
@@ -812,8 +748,8 @@ def test_incremental_tile_lut_update_equals_full_rebuild(spark):
     )[:2]
     mod_id, rm_id = small[0][1], small[1][1]
 
-    bitsets0 = rasterize_zone_bitsets_tiles(zones, z).localCheckpoint()
-    lut0 = tile_pixel_lut(zones, z).localCheckpoint()
+    bitsets0 = rasterize_zone_bitsets(zones, z, MERCATOR).localCheckpoint()
+    lut0 = zone_pixel_lut(zones, z, grid=MERCATOR).localCheckpoint()
     shifted = zones.filter(F.col("id") == mod_id).withColumn(
         "rings",
         F.expr(
@@ -827,10 +763,10 @@ def test_incremental_tile_lut_update_equals_full_rebuild(spark):
     )
 
     new_bitsets, affected, patch = incremental_lut_update(
-        bitsets0, shifted, [rm_id], z, grid="tiles"
+        bitsets0, shifted, [rm_id], z, grid=MERCATOR
     )
     lut_inc = apply_lut_patch(lut0, affected, patch)
-    lut_full = tile_pixel_lut(zones_after, z)
+    lut_full = zone_pixel_lut(zones_after, z, grid=MERCATOR)
 
     def lut_set(df):
         return {(r["cell"], tuple(r["zone_arr"])) for r in df.collect()}
