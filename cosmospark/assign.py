@@ -67,6 +67,18 @@ def auto_max_cells(n_zones: int, cell_budget: int = INDEX_CELL_BUDGET) -> int:
 # Zone index (driver-built, broadcast)
 
 
+def _covers_by_zone(lon: np.ndarray, lat: np.ndarray, zs: np.ndarray, rings: dict) -> np.ndarray:
+    """pip_covers per (point, zone) candidate pair: the pairs group by
+    zone and each zone's rings (``rings[zone_id]``) are tested once,
+    vectorized over all of that zone's points."""
+    ok = np.zeros(len(zs), dtype=bool)
+    if len(zs):
+        order = np.argsort(zs, kind="stable")
+        for rows in np.split(order, np.flatnonzero(np.diff(zs[order])) + 1):
+            ok[rows] = geom.pip_covers(lon[rows], lat[rows], rings[int(zs[rows[0]])])
+    return ok
+
+
 class ZoneIndex:
     """Per-(res, cell) candidate lists + packed geometries, CSR-encoded
     per resolution for vectorized numpy lookup inside Arrow batches."""
@@ -183,20 +195,9 @@ class ZoneIndex:
 
         if len(pts):
             accept = full.copy()
-            todo = np.nonzero(~full)[0]
-            if len(todo):
-                order = np.argsort(zs[todo], kind="stable")
-                todo = todo[order]
-                bz = zs[todo]
-                bounds = np.nonzero(np.diff(bz))[0] + 1
-                for seg in np.split(np.arange(len(todo)), bounds):
-                    if len(seg) == 0:
-                        continue
-                    zid = int(bz[seg[0]])
-                    rows = todo[seg]
-                    p = pts[rows]
-                    ok = geom.pip_covers(lon[p], lat[p], self.geoms[zid])
-                    accept[rows[ok]] = True
+            todo = np.flatnonzero(~full)
+            p = pts[todo]
+            accept[todo] = _covers_by_zone(lon[p], lat[p], zs[todo], self.geoms)
             pts, zs = pts[accept], zs[accept]
 
         out = np.full(n, -1, dtype=np.int64)
@@ -280,39 +281,40 @@ def encode_points(
 # already refuses (hierarchy.py geometry-join comment).
 BROADCAST_BUDGET_BYTES = 256 << 20
 
-# target rows per Python refine bucket (see _refine_buckets): small
-# enough that one bucket's points + candidate output fit comfortably in
-# a worker's memory, large enough that the per-invocation Arrow/pandas
-# overhead amortizes (~50k rows ≈ 2 MB of (pid, lon, lat))
+# target rows per Python refine group (see _refine_buckets and
+# _measured_splits): small enough that one group's candidate rows and
+# output fit comfortably in a worker's memory, large enough that the
+# per-invocation Arrow/pandas overhead amortizes (~50k (pid, lon, lat,
+# zone_id, rank, area) rows ≈ 2.4 MB)
 _REFINE_BUCKET_ROWS = 50_000
 
 
-def _refine_buckets(points: DataFrame, explode_factor: int) -> int:
-    """Bucket count for the cogroup PIP refine, derived from the fact
-    side's Catalyst size estimate (free — no job). r7: the refine used
-    to cogroup directly on (res, cell), which at a fine zone index
-    means tens of thousands of TINY groups — and per-group
-    Arrow↔pandas overhead, not PIP arithmetic, measured as ~90 % of the
-    path's CPU (77 CPU-s for ~2 s of kernel math on the 2M-point bench
-    mix). Hashing cells into ~rows/50k buckets keeps the identical
-    pairing logic (the kernel regroups per cell in numpy) while cutting
-    Python invocations by orders of magnitude. Accuracy within a few ×
-    is fine; the clamp bounds both ends, and bucket count scales with
-    the input (never a local[32]-tuned constant)."""
-    try:
-        stats = points._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            n = int(str(rc.get()))
-        else:
-            n = max(1, int(str(stats.sizeInBytes())) // 48)
-    except Exception:  # plan stats unavailable — conservative default
-        n = 1 << 22
-    n *= max(1, explode_factor)
-    b = 1
-    while b * _REFINE_BUCKET_ROWS < n and b < (1 << 20):
+def _refine_buckets(n_rows: int) -> int:
+    """Bucket count for the cogroup PIP refine, from the measured
+    boundary-candidate total: about ``_REFINE_BUCKET_ROWS`` rows per
+    bucket, a power of two, floored at 64 so small inputs still spread
+    over the cluster. Each bucket is one Python invocation — per-group
+    Arrow↔pandas overhead, not PIP arithmetic, was ~90 % of the path's
+    CPU when the refine cogrouped directly on (res, cell)."""
+    b = 64
+    while b * _REFINE_BUCKET_ROWS < n_rows and b < (1 << 20):
         b <<= 1
-    return max(b, 64)
+    return b
+
+
+def _measured_splits(boundary: DataFrame) -> tuple[DataFrame, int]:
+    """→ ((zone_id, n_split) for every zone with boundary candidates,
+    the candidate total). One JVM-only count per zone; a zone with more
+    than ``_REFINE_BUCKET_ROWS`` candidates splits
+    ``ceil(count / _REFINE_BUCKET_ROWS)`` ways, so no (zone, split)
+    group holds more than about that many rows however hot the zone."""
+    counts = boundary.groupBy("zone_id").count().localCheckpoint(eager=True)
+    total = counts.agg(F.sum("count")).collect()[0][0] or 0
+    splits = counts.select(
+        "zone_id",
+        F.ceil(F.col("count") / F.lit(_REFINE_BUCKET_ROWS)).cast("int").alias("n_split"),
+    )
+    return splits, int(total)
 
 
 def estimate_zone_geom_bytes(zones: DataFrame) -> int:
@@ -341,7 +343,6 @@ def assign_zones(
     id_col: str | None = None,
     broadcast_budget_bytes: int = BROADCAST_BUDGET_BYTES,
     raster_res: int = 9,
-    n_salt: int | None = None,
 ) -> DataFrame:
     """points + zone_id (long, -1 if unassigned and no kNN fallback).
 
@@ -351,9 +352,10 @@ def assign_zones(
         side (zero shuffles; the default — zone dims are broadcast-scale
         by design);
       * ``partitioned`` — no driver collect / no geometry broadcast:
-        zones explode to (res, cell) rows, points explode per index
-        resolution, and a cogroup-per-cell PIP join + per-point argmin
-        resolves the zone. Requires ``id_col`` (a unique point key).
+        points join the zones' (res, cell) keys, boundary candidates
+        refine in a cogroup keyed by (zone, split) and a per-point
+        argmin resolves the zone. Requires ``id_col`` (a unique point
+        key).
         This is the fallback for zone tables above broadcast budget
         (planet-scale detailed geometry can be tens of GB);
       * ``raster`` — PIXEL-APPROXIMATE assignment via the per-cell
@@ -383,7 +385,6 @@ def assign_zones(
         return assign_zones_partitioned(
             points, zones, lon_col, lat_col,
             knn_fallback=knn_fallback, index_max_cells=index_max_cells, id_col=id_col,
-            n_salt=n_salt,
         )
 
     spark = points.sparkSession
@@ -429,9 +430,10 @@ _ZONE_CELLS_SCHEMA = T.StructType(
 
 
 def _zone_cells_with_full(zones: DataFrame, max_cells: int) -> DataFrame:
-    """(zone_id, res, cell, full, rank, area, rings_bin) — the
-    distributed twin of the ZoneIndex CSR buckets, kept as a DataFrame
-    instead of a driver-pickled broadcast."""
+    """(zone_id, rank, area, rings_bin, cells) — one row per zone; the
+    distributed twin of the ZoneIndex, kept as a DataFrame instead of a
+    driver-pickled broadcast. ``cells`` holds the zone's (res, cell,
+    full) index entries."""
     from cosmospark.hierarchy import type_rank_col
 
     @F.pandas_udf(_ZONE_CELLS_SCHEMA)
@@ -460,19 +462,9 @@ def _zone_cells_with_full(zones: DataFrame, max_cells: int) -> DataFrame:
         return pd.DataFrame(out)
 
     rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(len(TYPE_RANK)))
-    z = zones.select(
-        F.col("id").alias("zone_id"), rank.alias("rank"), F.col("rings")
-    ).withColumn("rc", _cells("rings"))
-    return z.select(
-        "zone_id", "rank",
-        F.col("rc.area").alias("area"),
-        F.col("rc.rings_bin").alias("rings_bin"),
-        F.explode("rc.cells").alias("e"),
-    ).select(
-        "zone_id", "rank", "area", "rings_bin",
-        F.col("e.res").alias("res"), F.col("e.cell").alias("cell"),
-        F.col("e.full").alias("full"),
-    )
+    return zones.select(
+        F.col("id").alias("zone_id"), rank.alias("rank"), _cells("rings").alias("rc")
+    ).select("zone_id", "rank", "rc.area", "rc.rings_bin", "rc.cells")
 
 
 def assign_zones_partitioned(
@@ -483,43 +475,50 @@ def assign_zones_partitioned(
     knn_fallback: bool = False,
     index_max_cells: int | None = None,
     id_col: str = "pid",
-    n_salt: int | None = None,
-    hot_key_fraction: float = 0.05,
 ) -> DataFrame:
-    """The no-broadcast zone assignment: shuffle-join points and zone
-    geometry on (res, cell), refine with the same numpy PIP kernel inside
-    a cogroup, resolve per-point (rank, area, id) argmin JVM-side.
+    """The no-broadcast zone assignment: join points to the zones'
+    (res, cell) keys, refine the boundary candidates with the same numpy
+    PIP kernel inside a cogroup keyed by zone, resolve the per-point
+    (rank, area, id) argmin JVM-side.
 
-    Semantics identical to the broadcast path (same kernels, same
-    tie-break); cost profile differs: one shuffle of the fact side per
-    index resolution + one shuffle for the argmin — the price of not
-    shipping tens-of-GB geometry to every executor.
+    Semantics identical to the broadcast path (same candidate pairs,
+    same kernels, same tie-break); cost profile differs: shuffles of
+    the candidate rows instead of shipping tens-of-GB geometry to every
+    executor.
 
-    **Megacity skew (r5):** the JVM joins here are AQE's problem (skew
+    **Megacity skew:** the JVM joins here are AQE's problem (skew
     splitting works on SortMergeJoin), but the Python cogroup is NOT —
-    AQE cannot split an ``applyInPandas`` group, so one megacity cell
-    holding 30% of the facts becomes one straggler task. ``n_salt``
-    turns on adaptive hot-key salting: a cheap sampled count finds
-    keys carrying ≥ ``hot_key_fraction`` of the refine rows, ONLY those
-    keys' points spread across ``n_salt`` sub-keys (zone rows replicate
-    ×``n_salt`` for hot keys only — zone-dim × few-hot-cells scale),
-    and the cogroup keys on (res, cell, salt). Cold keys keep salt 0,
-    so the common case pays nothing (the same sampled-first-pass
-    pattern as ``adaptive_salted_agg``, applied to the cogroup)."""
+    AQE cannot split an ``applyInPandas`` group, so one megacity zone
+    holding 30% of the facts would be one straggler task. The refine
+    therefore keys on (zone, split): one JVM count per zone over the
+    boundary candidates gives ``n_split = ceil(count /
+    _REFINE_BUCKET_ROWS)``, a point takes split ``pmod(xxhash64(pid),
+    n_split)`` and only the zone's geometry row, the cheap side, is
+    replicated ``n_split`` times. A zone's geometry crosses the shuffle
+    once per split, never once per boundary cell, and zones with no
+    boundary candidates are not shipped at all."""
     spark = points.sparkSession
     if index_max_cells is None:
-        # zone cells are SHUFFLED here, not broadcast — the explode
-        # factor is a per-row cost, so the fixed conservative default
-        # applies rather than the broadcast path's auto budget
+        # the per-cell keys are joined against every point here, not
+        # broadcast in one index — the fixed conservative default applies
+        # rather than the broadcast path's auto budget
         index_max_cells = INDEX_MAX_CELLS
     # localCheckpoint, not .cache(): blocks free with the plan via the
     # ContextCleaner instead of accumulating catalog entries across
     # composed query invocations (ADVICE r3 lifecycle rule)
-    zcells = _zone_cells_with_full(zones, index_max_cells).localCheckpoint(eager=True)
+    zrows = _zone_cells_with_full(zones, index_max_cells).localCheckpoint(eager=True)
+    # the key rows take a fresh zone_id attribute: zrows feeds both
+    # sides of the refine cogroup, which must not share expression ids
+    zkeys = zrows.select(
+        F.col("zone_id").alias("zone_id"), "rank", "area", F.explode("cells").alias("e")
+    ).select(
+        F.col("e.res").alias("res"), F.col("e.cell").alias("cell"),
+        "zone_id", "rank", "area", F.col("e.full").alias("full"),
+    )
     # one tiny agg gives the resolution list AND the cell count that
     # sizes the key-only broadcasts below (geometry is NEVER broadcast
-    # on this path; 16-byte (res, cell) keys are a different budget)
-    res_stats = zcells.groupBy("res").count().collect()
+    # on this path; (res, cell) key rows are a different budget)
+    res_stats = zkeys.groupBy("res").count().collect()
     res_list = sorted(r["res"] for r in res_stats)
     n_zcells = sum(r["count"] for r in res_stats)
     keys_small = n_zcells * 32 <= BROADCAST_BUDGET_BYTES
@@ -561,176 +560,60 @@ def assign_zones_partitioned(
             T.StructField("area", T.DoubleType()),
         ]
     )
+    out_cols = [f.name for f in cand_schema.fields]
 
-    def _make_pip_bucket(key_cols: list[str]):
-        """Kernel for one HASH BUCKET of (res, cell[, salt]) groups
-        (r7). The bucket kernel regroups its point rows per cell with
-        one lexsort and evaluates exactly the same (point, zone-row)
-        pairs the per-cell cogroup did — same pip_covers kernel, same
-        inputs, so the candidate set is identical; only the Python
-        invocation count changes (tens of thousands of tiny per-cell
-        calls → one per bucket). Ring unpacking memoizes per zone_id
-        within the bucket (a zone's geometry repeats across its
-        boundary cells)."""
-
-        def _pip_bucket(key, pg: pd.DataFrame, zg: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in cand_schema.fields}
-            )
-            if len(pg) == 0 or len(zg) == 0:
-                return empty
-            # positional access: itertuples mangles leading-underscore
-            # names (the _salt key), so index numpy views instead
-            z_keys = [zg[c].to_numpy() for c in key_cols]
-            z_zid = zg["zone_id"].to_numpy()
-            z_rank = zg["rank"].to_numpy()
-            z_area = zg["area"].to_numpy()
-            z_bin = zg["rings_bin"].to_list()
-            zmap: dict = {}
-            for i in range(len(zg)):
-                zmap.setdefault(
-                    tuple(int(c[i]) for c in z_keys), []
-                ).append(i)
-            lon = pg[lon_col].to_numpy(dtype=np.float64)
-            lat = pg[lat_col].to_numpy(dtype=np.float64)
-            pids = pg[id_col].to_numpy()
-            kcols = [pg[c].to_numpy() for c in key_cols]
-            order = np.lexsort(kcols[::-1])
-            ks = [c[order] for c in kcols]
-            n = len(order)
-            brk = np.zeros(n, dtype=bool)
-            brk[0] = True
-            for c in ks:
-                brk[1:] |= c[1:] != c[:-1]
-            starts = np.flatnonzero(brk)
-            ends = np.append(starts[1:], n)
-            rmemo: dict = {}
-            out_pid, out_zid, out_rank, out_area = [], [], [], []
-            for s, e in zip(starts, ends):
-                zrows = zmap.get(tuple(int(c[s]) for c in ks))
-                if not zrows:
-                    continue
-                idx = order[s:e]
-                gl = lon[idx]
-                gt = lat[idx]
-                gp = pids[idx]
-                for zi in zrows:
-                    zid = int(z_zid[zi])
-                    rr = rmemo.get(zid)
-                    if rr is None:
-                        rr = rmemo[zid] = geom.unpack_rings(z_bin[zi])
-                    hit = geom.pip_covers(gl, gt, rr)
-                    hidx = np.nonzero(hit)[0]
-                    if len(hidx):
-                        out_pid.append(gp[hidx])
-                        out_zid.append(np.full(len(hidx), zid, dtype=np.int64))
-                        out_rank.append(
-                            np.full(len(hidx), int(z_rank[zi]), dtype=np.int32)
-                        )
-                        out_area.append(np.full(len(hidx), float(z_area[zi])))
-            if not out_pid:
-                return empty
-            return pd.DataFrame(
-                {
-                    "pid": np.concatenate(out_pid),
-                    "zone_id": np.concatenate(out_zid),
-                    "rank": np.concatenate(out_rank),
-                    "area": np.concatenate(out_area),
-                }
-            )
-
-        return _pip_bucket
+    def _pip_bucket(pg: pd.DataFrame, zg: pd.DataFrame) -> pd.DataFrame:
+        """Kernel for one HASH BUCKET of (zone, split) groups: each
+        zone's rings unpack once and one pip_covers call tests all of
+        that zone's candidates in the bucket, as ZoneIndex.assign does.
+        Two splits of one zone may share a bucket; their geometry rows
+        are identical."""
+        if len(pg) == 0 or len(zg) == 0:
+            return pd.DataFrame({c: pd.Series(dtype="object") for c in out_cols})
+        rings = {
+            int(z): geom.unpack_rings(b)
+            for z, b in zip(zg["zone_id"].to_numpy(), zg["rings_bin"])
+        }
+        ok = _covers_by_zone(
+            pg[lon_col].to_numpy(dtype=np.float64),
+            pg[lat_col].to_numpy(dtype=np.float64),
+            pg["zone_id"].to_numpy(),
+            rings,
+        )
+        return pg.loc[ok, out_cols]
 
     def _maybe_bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if keys_small else df
 
-    # FULL cells (cell entirely inside the zone) need no geometry and no
-    # Python: a JVM equi-join on (res, cell) IS the containment proof.
-    # For hierarchy-shaped zone tables the coarse levels (country/state)
-    # mark most of their area FULL, so the bulk of the candidate volume
-    # resolves in whole-stage codegen and never crosses the Arrow
-    # boundary. The join side carries 4 scalars per cell — zone-dim cell
-    # scale — broadcast only under the key budget, shuffle join above it.
-    zfull = zcells.filter(F.col("full")).select(
-        "res", "cell", "zone_id", "rank", "area"
-    )
-    full_hits = pcells.join(_maybe_bc(zfull), ["res", "cell"]).select(
+    # ONE key join yields every (point, zone) candidate pair. FULL cells
+    # (cell entirely inside the zone) need no geometry and no Python:
+    # the equi-join on (res, cell) IS the containment proof, so those
+    # pairs go straight to the argmin in whole-stage codegen. The key
+    # side carries 5 scalars per cell — zone-dim cell scale — broadcast
+    # only under the key budget, shuffle join above it.
+    pairs = pcells.join(_maybe_bc(zkeys), ["res", "cell"])
+    full_hits = pairs.filter(F.col("full")).select(
         F.col(id_col).alias("pid"), "zone_id", "rank", "area"
     )
-
-    # Boundary (non-FULL) cells go through the cogroup PIP refine — but
-    # only point rows whose (res, cell) actually has a boundary cell:
-    # the key-only semi-join drops the rest map-side, which also kills
-    # the ~N(point cells) empty python groups the round-2 cogroup paid
-    # for (every point cell with no zone at that res invoked the UDF).
-    zref = zcells.filter(~F.col("full"))
-    pref = pcells.join(
-        _maybe_bc(zref.select("res", "cell").distinct()), ["res", "cell"], "leftsemi"
+    boundary = pairs.filter(~F.col("full")).select(
+        F.col(id_col).alias("pid"), lon_col, lat_col, "zone_id", "rank", "area"
     )
-    group_keys = ["res", "cell"]
-    if n_salt and n_salt > 1:
-        # adaptive hot-key detection: ONE sampled aggregate over the
-        # refine rows (deterministic seed), keys above hot_key_fraction
-        # collect driver-side (≤ 1/hot_key_fraction of them by
-        # construction — a handful of scalars, never geometry)
-        sampled = (
-            pref.sample(fraction=0.02, seed=42)
-            .groupBy("res", "cell")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        tot = sampled.agg(F.sum("c")).collect()[0][0] or 0
-        hot_rows = (
-            [
-                (int(r["res"]), int(r["cell"]))
-                for r in sampled.filter(
-                    F.col("c") >= hot_key_fraction * tot
-                ).collect()
-            ]
-            if tot
-            else []
-        )
-        if hot_rows:
-            hot_df = F.broadcast(
-                spark.createDataFrame(
-                    hot_rows, "res int, cell long"
-                ).withColumn("_hot", F.lit(True))
-            )
-            salt_lits = F.array(*[F.lit(i) for i in range(n_salt)])
-            pref = (
-                pref.join(hot_df, ["res", "cell"], "left")
-                .withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("_hot"), F.pmod(F.hash(id_col), F.lit(n_salt))
-                    ).otherwise(F.lit(0)),
-                )
-                .drop("_hot")
-            )
-            zref = (
-                zref.join(hot_df, ["res", "cell"], "left")
-                .withColumn(
-                    "_salt",
-                    F.explode(
-                        F.when(F.col("_hot"), salt_lits).otherwise(
-                            F.array(F.lit(0))
-                        )
-                    ),
-                )
-                .drop("_hot")
-            )
-            group_keys = ["res", "cell", "_salt"]
-    # r7: cogroup on a HASH BUCKET of the group key, not the raw
-    # (res, cell[, salt]) — see _refine_buckets. Salted sub-groups of a
-    # hot cell hash to different buckets, so the salting contract (one
-    # megacity cell never lands on one task) is preserved.
-    n_buckets = _refine_buckets(points, len(res_list))
-    bcol = F.pmod(F.xxhash64(*group_keys), F.lit(n_buckets))
+    # boundary pairs refine in a cogroup on a HASH BUCKET of
+    # (zone_id, split), sized from the measured candidate total
+    splits, total = _measured_splits(boundary)
+    splits = _maybe_bc(splits)
+    bucket = F.pmod(F.xxhash64("zone_id", "split"), F.lit(_refine_buckets(total)))
+    pg = boundary.join(splits, "zone_id").withColumn(
+        "split", F.pmod(F.xxhash64("pid"), F.col("n_split")).cast("int")
+    ).withColumn("_b", bucket).drop("n_split", "split")
+    zg = zrows.join(splits, "zone_id").select(
+        "zone_id", "rings_bin",
+        F.explode(F.sequence(F.lit(0), F.col("n_split") - 1)).alias("split"),
+    ).withColumn("_b", bucket).drop("split")
     cand = (
-        pref.withColumn("_b", bcol)
-        .groupBy("_b")
-        .cogroup(zref.withColumn("_b", bcol).groupBy("_b"))
-        .applyInPandas(_make_pip_bucket(group_keys), cand_schema)
+        pg.groupBy("_b")
+        .cogroup(zg.groupBy("_b"))
+        .applyInPandas(_pip_bucket, cand_schema)
         .unionByName(full_hits)
     )
     winners = cand.groupBy("pid").agg(

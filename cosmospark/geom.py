@@ -482,8 +482,6 @@ def _rect_edge_hits(
         emaxx = np.maximum(x1, x2)
         eminy = np.minimum(y1, y2)
         emaxy = np.maximum(y1, y2)
-        dx = (x2 - x1)[None, :]
-        dy = (y2 - y1)[None, :]
         e = len(x1)
         step = max(64, _TILE_ELEMS // max(4 * e, 1))
         for s in range(0, k, step):
@@ -497,21 +495,22 @@ def _rect_edge_hits(
             # (one hypotenuse's bbox can cover the whole polygon);
             # refine: the edge's LINE must also separate the rect's
             # corners — all 4 on one strict side ⟹ the segment misses
-            # the rect
-            cminx = minx[s : s + step, None]
-            cmaxx = maxx[s : s + step, None]
-            cminy = miny[s : s + step, None]
-            cmaxy = maxy[s : s + step, None]
-            ex = x1[None, :]
-            ey = y1[None, :]
-            d1 = dx * (cminy - ey) - dy * (cminx - ex)
-            d2 = dx * (cminy - ey) - dy * (cmaxx - ex)
-            d3 = dx * (cmaxy - ey) - dy * (cminx - ex)
-            d4 = dx * (cmaxy - ey) - dy * (cmaxx - ex)
+            # the rect. Evaluated only on the bbox-overlapping (rect,
+            # edge) pairs, a handful per rect on detailed rings.
+            ri, ei = np.nonzero(bb)
+            ri += s
+            dx = x2[ei] - x1[ei]
+            dy = y2[ei] - y1[ei]
+            ex = x1[ei]
+            ey = y1[ei]
+            d1 = dx * (miny[ri] - ey) - dy * (minx[ri] - ex)
+            d2 = dx * (miny[ri] - ey) - dy * (maxx[ri] - ex)
+            d3 = dx * (maxy[ri] - ey) - dy * (minx[ri] - ex)
+            d4 = dx * (maxy[ri] - ey) - dy * (maxx[ri] - ex)
             one_side = ((d1 > EPS) & (d2 > EPS) & (d3 > EPS) & (d4 > EPS)) | (
                 (d1 < -EPS) & (d2 < -EPS) & (d3 < -EPS) & (d4 < -EPS)
             )
-            edge_hit[s : s + step] |= (bb & ~one_side).any(axis=1)
+            edge_hit[ri[~one_side]] = True
     return edge_hit
 
 

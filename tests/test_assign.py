@@ -221,11 +221,11 @@ class TestSparkJobs:
         assert [r["zone_id"] for r in part0] == [r["zone_id"] for r in base]
 
     def test_partitioned_bucket_regrouping(self, spark, monkeypatch):
-        # r7: the cogroup keys on a hash BUCKET of (res, cell), and the
-        # kernel regroups per cell internally. Force every cell into
-        # ONE bucket so the in-kernel lexsort/run-split logic carries
-        # the whole pairing — output must still match the broadcast
-        # path exactly (including at a second, prime bucket count).
+        # the cogroup keys on a hash BUCKET of (zone, split), and the
+        # kernel regroups per zone internally. Force every zone into
+        # ONE bucket so the in-kernel per-zone grouping carries the
+        # whole pairing — output must still match the broadcast path
+        # exactly (including at a second, prime bucket count).
         import cosmospark.assign as A
         from cosmospark.fixtures import detailed_lux_zones
 
@@ -242,7 +242,7 @@ class TestSparkJobs:
         pdf = spark.createDataFrame(pts, "pid long, lon double, lat double")
         base = assign_zones(pdf, zones).orderBy("pid").collect()
         for nb in (1, 7):
-            monkeypatch.setattr(A, "_refine_buckets", lambda p, f, _n=nb: _n)
+            monkeypatch.setattr(A, "_refine_buckets", lambda n, _n=nb: _n)
             part = assign_zones(
                 pdf, zones, strategy="partitioned", id_col="pid"
             ).orderBy("pid").collect()
@@ -439,38 +439,112 @@ def test_planet_soak_natural_auto_cutover_and_raster_lut(spark):
     assert got_r == expected
 
 
-def test_partitioned_cogroup_hot_key_salting(spark):
-    """r5: AQE cannot split an applyInPandas cogroup group, so a
-    megacity cell is a straggler on the partitioned path. With n_salt,
-    adaptive hot-key detection (sampled count) salts ONLY the hot
-    cells' points, replicates only those cells' zone rows, and the
-    cogroup keys on (res, cell, _salt) — results identical."""
+def test_partitioned_hot_zone_split(spark, monkeypatch):
+    """AQE cannot split an applyInPandas cogroup group, so the refine
+    keys on (zone, split) with n_split measured per zone. A hot spot
+    straddling one locality edge makes that zone's boundary candidates
+    exceed a lowered _REFINE_BUCKET_ROWS: the zone must split at least
+    two ways, and the output must equal the broadcast path row for
+    row."""
     from pyspark.sql import functions as F
 
-    from cosmospark.assign import assign_zones
-    from cosmospark.fixtures import lux_world
-    from cosmospark.ztypes import ZONES_RAW_SCHEMA
+    import cosmospark.assign as A
+    from cosmospark.queries import _lux_typed_zones
 
-    zones = spark.createDataFrame(lux_world(), schema=ZONES_RAW_SCHEMA)
-    # ~40% of points inside one commune-sized spot → one hot cell
-    mega = (
+    zones = _lux_typed_zones(spark)
+    # 40% of the points on a 0.002° x 0.001° spot across the west edge
+    # (lon 6.2) of locality 36, the rest spread over the world box
+    spot = (
         "case when id % 10 < 4 then"
-        " named_struct('lon', cast(6.13 + (id % 97) / 100000.0 as double),"
-        "              'lat', cast(49.61 + (id % 89) / 100000.0 as double))"
+        " named_struct('lon', cast(6.199 + (id % 97) / 48500.0 as double),"
+        "              'lat', cast(49.4 + (id % 89) / 89000.0 as double))"
         " else named_struct('lon', cast(2.0 + (id * 7919 % 1300) / 100.0 as double),"
         "                   'lat', cast(44.0 + (id * 104729 % 1000) / 100.0 as double)) end"
     )
     pts = (
-        spark.range(40_000)
-        .select(F.col("id").alias("pid"), F.expr(mega).alias("p"))
+        spark.range(5_000)
+        .select(F.col("id").alias("pid"), F.expr(spot).alias("p"))
         .select("pid", F.col("p.lon").alias("lon"), F.col("p.lat").alias("lat"))
     )
-    base = assign_zones(pts, zones, strategy="partitioned", id_col="pid")
-    salted = assign_zones(
-        pts, zones, strategy="partitioned", id_col="pid", n_salt=8
+    base = assign_zones(pts, zones).orderBy("pid").collect()
+
+    seen = []
+    measured = A._measured_splits
+
+    def _spy(boundary):
+        splits, total = measured(boundary)
+        seen.append(splits.agg(F.max("n_split")).collect()[0][0])
+        return splits, total
+
+    monkeypatch.setattr(A, "_REFINE_BUCKET_ROWS", 500)
+    monkeypatch.setattr(A, "_measured_splits", _spy)
+    part = assign_zones(
+        pts, zones, strategy="partitioned", id_col="pid"
+    ).orderBy("pid").collect()
+    assert seen and seen[0] >= 2, f"hot zone not split: {seen}"
+    assert [(r["pid"], r["zone_id"]) for r in part] == [
+        (r["pid"], r["zone_id"]) for r in base
+    ]
+
+
+def test_partitioned_hostile_points_match_broadcast(spark, monkeypatch):
+    """Points exactly on shared commune edges, on shared vertices of
+    four communes and two cantons, on the corners of FULL index cells
+    and outside every zone: the partitioned path (broadcast key join
+    and, at BROADCAST_BUDGET_BYTES = 0, the shuffle key join) must
+    equal the broadcast path row for row, with and without the kNN
+    fallback."""
+    import cosmospark.assign as A
+    from cosmospark.fixtures import LUX_X0, LUX_Y0
+    from cosmospark.queries import _lux_typed_zones
+
+    zones = _lux_typed_zones(spark).cache()
+    xy = []
+    for i in (0, 4, 12):
+        for j in (1, 4, 7):
+            y = LUX_Y0 + j * 1.25
+            xy += [
+                (LUX_X0 + i + 0.5, y),  # edge shared by two communes
+                (LUX_X0 + i, y),  # vertex of four communes, two cantons
+                (LUX_X0 + i, y + 0.3),  # edge shared by two cantons
+            ]
+    # edges and corners of the extra commune and of a locality
+    xy += [(LUX_X0 + 0.1, LUX_Y0 + 0.25), (LUX_X0 + 0.4, LUX_Y0 + 0.4)]
+    xy += [(LUX_X0 + 0.2, LUX_Y0 + 0.25), (LUX_X0 + 0.6, LUX_Y0 + 0.75)]
+    # corners of FULL cells of the index the broadcast path uses
+    idx = build_zone_index(zones)
+    corners = 0
+    for res in idx.res_list:
+        cell_ids, offs, _, fulls = idx.csr[res]
+        for k in np.flatnonzero(fulls)[::97][:4]:
+            c = cell_ids[np.searchsorted(offs, k, side="right") - 1]
+            x0, y0, x1, y1 = cells.cell_bounds(int(c), res)
+            xy += [(x0, y0), (x1, y1), (x0, y1)]
+            corners += 1
+    assert corners, "the index has no FULL cells"
+    # outside every zone, including the world's corners
+    xy += [(LUX_X0 - 0.5, LUX_Y0 + 3.0), (20.0, 60.0), (-180.0, -90.0), (180.0, 90.0)]
+    pts = spark.createDataFrame(
+        [(k, float(x), float(y)) for k, (x, y) in enumerate(xy)],
+        "pid long, lon double, lat double",
     )
-    plan = salted._jdf.queryExecution().toString()
-    assert "_salt" in plan, "hot-key salting must reach the cogroup keys"
-    a = {(r["pid"], r["zone_id"]) for r in base.collect()}
-    b = {(r["pid"], r["zone_id"]) for r in salted.collect()}
-    assert a == b
+
+    def zone_ids(**kw):
+        return [r["zone_id"] for r in assign_zones(pts, zones, **kw).orderBy("pid").collect()]
+
+    want = {knn: zone_ids(knn_fallback=knn) for knn in (False, True)}
+    for knn, w in want.items():
+        assert (-1 in w) != knn
+        assert zone_ids(strategy="partitioned", id_col="pid", knn_fallback=knn) == w
+    # over the key budget, with Spark's own size-based broadcast off too,
+    # the key join must plan as a shuffle join
+    monkeypatch.setattr(A, "BROADCAST_BUDGET_BYTES", 0)
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        part = assign_zones(pts, zones, strategy="partitioned", id_col="pid")
+        assert "BroadcastHashJoin" not in part._jdf.queryExecution().executedPlan().toString()
+        assert [r["zone_id"] for r in part.orderBy("pid").collect()] == want[False]
+    finally:
+        spark.conf.set(threshold, saved)

@@ -135,8 +135,8 @@ def test_simhash_single_pass(spark):
 def test_partitioned_assignment_no_geometry_broadcast(spark):
     """VERDICT r2 #8: the partitioned (over-broadcast-budget) assignment
     path must plan as a cell cogroup where no executor ever receives the
-    full zone geometry. Key-only broadcasts (the (res, cell) semi-join
-    filter and the FULL-cell scalar join — 4 longs per cell, themselves
+    full zone geometry. Key-only broadcasts (the (res, cell) key join —
+    5 scalars per cell — and the per-zone split counts, both
     budget-gated) are allowed; a broadcast that carries ``rings_bin`` is
     the planet-scale OOM and is not."""
     from pyspark.sql import functions as F
@@ -161,6 +161,29 @@ def test_partitioned_assignment_no_geometry_broadcast(spark):
         head = seg[:400]
         assert "rings_bin" not in head, f"geometry broadcast: {head}"
     assert "CartesianProduct" not in plan
+
+    # the cogroup's geometry side is keyed by zone, never per cell: it
+    # carries rings_bin but no res/cell column (a per-cell key would
+    # ship each zone's geometry once per boundary cell)
+    def find(node, name):
+        if node.nodeName() == name:
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i), name)
+            if hit is not None:
+                return hit
+        return None
+
+    def names(node):
+        out = node.output()
+        return {out.apply(i).name() for i in range(out.size())}
+
+    cg = find(df._jdf.queryExecution().optimizedPlan(), "FlatMapCoGroupsInPandas")
+    assert cg is not None
+    geo, facts = names(cg.right()), names(cg.left())
+    assert "rings_bin" in geo and not geo & {"res", "cell"}, geo
+    assert "rings_bin" not in facts, facts
 
 
 def test_dedup_exact_fixed_width_shuffle_key(spark):
