@@ -5,10 +5,14 @@ lookup (``get_parent`` / ``contains_center``, src/additional_zones.rs:102-120,
 src/zone_ext.rs:279-284) redesigned for 10^12 rows:
 
 * the zone dimension (small by design — the reference holds the whole
-  planet's zones in one process) is compiled into a **per-cell candidate
-  index** on the driver and broadcast to executors once;
-* the fact side runs ONE narrow ``mapInPandas`` pass — scan → Arrow
-  batch → vectorized numpy kernel → sink. No shuffle at all, so
+  planet's zones in one process) is compiled into ONE per-zone index on
+  executors (``_zone_index_rows``: each zone's cell cover with FULL
+  flags, rank, area, kNN centre and packed rings). The broadcast path
+  fetches those rows over Arrow, assembles a per-cell candidate index
+  (``ZoneIndex``) on the driver and broadcasts it once; the partitioned
+  path joins on the same rows;
+* the broadcast fact side runs ONE narrow ``mapInPandas`` pass — scan →
+  Arrow batch → vectorized numpy kernel → sink. No shuffle at all, so
   megacity-cell skew cannot produce a hot reducer on this path, and
   throughput scales linearly with executors (the north-rule scaling
   criterion);
@@ -16,8 +20,8 @@ src/zone_ext.rs:279-284) redesigned for 10^12 rows:
   interior points skip the geometry test entirely — only boundary-cell
   points pay for exact PIP (the dominant cost saver at scale: interior
   cells vastly outnumber boundary cells at fine resolutions);
-* points covered by no zone optionally fall back to kNN on zone
-  centroids (nearest-zone lookup).
+* points covered by no zone optionally fall back to kNN on zone centres
+  (the zone's ``center``, else its polygon centroid) on both paths.
 
 The per-zone choice mirrors build_hierarchy: smallest zone_type wins,
 tie-broken by (area, zone_id) — deterministic under any partitioning.
@@ -29,10 +33,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from cosmospark import cells, geom
-from cosmospark.ztypes import TYPE_RANK
+from cosmospark.ztypes import CENTER_TYPE, TYPE_RANK
 
 DEFAULT_RESOLUTIONS = (4, 7, 9)
 DEFAULT_TILE_Z = 12
@@ -64,7 +69,96 @@ def auto_max_cells(n_zones: int, cell_budget: int = INDEX_CELL_BUDGET) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Zone index (driver-built, broadcast)
+# Zone index: built per zone on executors, assembled on the driver
+
+
+_ZONE_ROWS_SCHEMA = T.StructType(
+    [
+        # the zone's index entries: its cells at its fit resolution, each
+        # flagged FULL when the whole cell lies inside the zone
+        T.StructField("res", T.IntegerType()),
+        T.StructField("cells", T.ArrayType(T.LongType())),
+        T.StructField("full", T.ArrayType(T.BooleanType())),
+        # rings flattened to binary: the nested rings struct segfaults
+        # pyspark's cogroup Arrow deserializer (mapInPandas is fine);
+        # the flat encoding also shrinks the shuffle payload
+        T.StructField("rings_bin", T.BinaryType()),
+        # geom.area of the zone's numpy rings: the argmin tie-break, the
+        # same doubles on both paths
+        T.StructField("area", T.DoubleType()),
+        # geom.centroid: the kNN centre of a zone with no ``center``
+        T.StructField("centroid", CENTER_TYPE),
+    ]
+)
+
+
+def _zone_index_rows(zones: DataFrame, max_cells: int) -> DataFrame:
+    """(zone_id, rank, area, center, rings_bin, res, cells, full) — one
+    row per zone with geometry: the one zone index both exact assign
+    paths use. The partitioned path joins on these rows; the broadcast
+    path fetches them over Arrow and assembles a ``ZoneIndex``. ``center``
+    is the zone's own ``center``, else its polygon centroid
+    (``with_bbox_and_area``'s chain)."""
+    from cosmospark.hierarchy import type_rank_col
+
+    @F.pandas_udf(_ZONE_ROWS_SCHEMA)
+    def _rows(rings_s: pd.Series) -> pd.DataFrame:
+        out = []
+        for rows in rings_s:
+            rr = geom.rows_to_rings(rows)
+            minx, miny, maxx, maxy = geom.bbox(rr)
+            res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
+            cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
+            if len(cc):
+                cminx, cminy, cmaxx, cmaxy = cells.cell_bounds_batch(cc, res)
+                fv = geom.rects_fully_covered(cminx, cminy, cmaxx, cmaxy, rr)
+            else:
+                fv = np.zeros(0, dtype=bool)
+            c = geom.centroid(rr)
+            out.append(
+                {
+                    "res": res,
+                    "cells": cc,
+                    "full": fv,
+                    "rings_bin": geom.pack_rings(rr),
+                    "area": geom.area(rr),
+                    "centroid": {"lon": c[0], "lat": c[1]} if c else None,
+                }
+            )
+        return pd.DataFrame(out)
+
+    rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(len(TYPE_RANK)))
+    centre = F.col("rc.centroid")
+    if "center" in zones.columns:
+        centre = F.coalesce(F.col("center"), centre)
+    return (
+        zones.filter(F.size("rings") > 0)
+        .select("*", _rows("rings").alias("rc"))
+        .select(
+            F.col("id").alias("zone_id"), rank.alias("rank"), "rc.area",
+            centre.alias("center"), "rc.rings_bin", "rc.res", "rc.cells", "rc.full",
+        )
+    )
+
+
+def _centres(rows: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(zone_id, lon, lat) of the zone rows' known centres, by zone id."""
+    c = rows.column("center").combine_chunks()
+    ok = c.is_valid().to_numpy(zero_copy_only=False)
+    ids = rows.column("zone_id").to_numpy()[ok]
+    order = np.argsort(ids, kind="stable")
+    lon = c.field("lon").to_numpy(zero_copy_only=False)[ok]
+    lat = c.field("lat").to_numpy(zero_copy_only=False)[ok]
+    return ids[order], lon[order], lat[order]
+
+
+def _nearest_centre(lon: np.ndarray, lat: np.ndarray, centres) -> np.ndarray:
+    """Zone id of each point's nearest centre; ties go to the smallest
+    zone id. Brute force: the zone dim is broadcast-scale (the scale
+    path would pre-bucket the centres by coarse cell)."""
+    ids, cx, cy = centres
+    d2 = (lon[:, None] - cx[None, :]) ** 2 + (lat[:, None] - cy[None, :]) ** 2
+    return ids[np.argmin(d2, axis=1)]
 
 
 def _covers_by_zone(lon: np.ndarray, lat: np.ndarray, zs: np.ndarray, rings: dict) -> np.ndarray:
@@ -80,81 +174,44 @@ def _covers_by_zone(lon: np.ndarray, lat: np.ndarray, zs: np.ndarray, rings: dic
 
 
 class ZoneIndex:
-    """Per-(res, cell) candidate lists + packed geometries, CSR-encoded
-    per resolution for vectorized numpy lookup inside Arrow batches."""
+    """Per-(res, cell) candidate lists + unpacked geometries, CSR-encoded
+    per resolution for vectorized numpy lookup inside Arrow batches.
+    Assembled from the Arrow table of ``_zone_index_rows``: covers, FULL
+    flags, ranks, areas and centres all come from those rows."""
 
-    def __init__(self, zone_rows: list[dict], max_cells: int | None = None):
-        if max_cells is None:
-            max_cells = auto_max_cells(len(zone_rows))
-        self.geoms: dict[int, list] = {}
-        self.rank: dict[int, int] = {}
-        self.area: dict[int, float] = {}
-        cent_ids, cent_x, cent_y = [], [], []
-        buckets: dict[tuple[int, int], list[tuple[int, bool]]] = {}
-
-        for row in zone_rows:
-            zid = int(row["id"])
-            rings = geom.rows_to_rings(row["rings"]) if row["rings"] else None
-            if rings is None:
-                continue
-            self.geoms[zid] = rings
-            rk = TYPE_RANK.get(row.get("zone_type"), len(TYPE_RANK))
-            self.rank[zid] = rk
-            a = geom.area(rings)
-            self.area[zid] = a
-            c = geom.centroid(rings)
-            if c is not None:
-                cent_ids.append(zid)
-                cent_x.append(c[0])
-                cent_y.append(c[1])
-            minx, miny, maxx, maxy = geom.bbox(rings)
-            res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
-            cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-            # FULL = the whole cell is inside the zone → PIP skipped for
-            # its points; marked vectorized across the zone's cells
-            # (corners-inside + no-edge-overlap — conservative but O(k))
-            if len(cc):
-                cminx, cminy, cmaxx, cmaxy = cells.cell_bounds_batch(cc, res)
-                fulls_v = geom.rects_fully_covered(cminx, cminy, cmaxx, cmaxy, rings)
-            else:
-                fulls_v = np.zeros(0, dtype=bool)
-            for cell, full in zip(cc, fulls_v):
-                buckets.setdefault((res, int(cell)), []).append((zid, bool(full)))
-
+    def __init__(self, rows: pa.Table):
+        rows = rows.sort_by("zone_id")
+        zids = rows.column("zone_id").to_numpy()
+        self.geoms: dict[int, list] = {
+            int(z): geom.unpack_rings(b)
+            for z, b in zip(zids, rows.column("rings_bin").to_pylist())
+        }
         # dense rank/area lookup arrays (vectorized candidate scoring)
-        self._zid_sorted = np.array(sorted(self.rank), dtype=np.int64)
-        self._rank_arr = np.array([self.rank[z] for z in self._zid_sorted], dtype=np.int64)
-        self._area_arr = np.array([self.area[z] for z in self._zid_sorted], dtype=np.float64)
+        self._zid_sorted = zids
+        self._rank_arr = rows.column("rank").to_numpy().astype(np.int64)
+        self._area_arr = rows.column("area").to_numpy()
+        self.centres = _centres(rows)
 
-        self.centroid_ids = np.array(cent_ids, dtype=np.int64)
-        self.centroid_x = np.array(cent_x, dtype=np.float64)
-        self.centroid_y = np.array(cent_y, dtype=np.float64)
-
-        # CSR per resolution
-        self.res_list: list[int] = sorted({r for (r, _) in buckets})
+        # CSR per resolution: entries sorted by (cell, zone_id)
+        entries = rows.column("cells").combine_chunks()
+        at_zone = entries.value_parent_indices().to_numpy()
+        owner = self._zid_sorted[at_zone]
+        res = rows.column("res").to_numpy()[at_zone]
+        cell = entries.flatten().to_numpy()
+        full = rows.column("full").combine_chunks().flatten().to_numpy(zero_copy_only=False)
+        self.res_list: list[int] = np.unique(res).tolist()
         self.csr: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-        for res in self.res_list:
-            items = sorted((c, v) for (r, c), v in buckets.items() if r == res)
-            cell_ids = np.array([c for c, _ in items], dtype=np.int64)
-            offs = np.zeros(len(items) + 1, dtype=np.int64)
-            zids, fulls = [], []
-            for i, (_, v) in enumerate(items):
-                offs[i + 1] = offs[i] + len(v)
-                for zid, full in v:
-                    zids.append(zid)
-                    fulls.append(full)
-            self.csr[res] = (
-                cell_ids,
-                offs,
-                np.array(zids, dtype=np.int64),
-                np.array(fulls, dtype=bool),
-            )
+        for r in self.res_list:
+            at = np.flatnonzero(res == r)
+            at = at[np.lexsort((owner[at], cell[at]))]
+            cell_ids, starts = np.unique(cell[at], return_index=True)
+            offs = np.append(starts, len(at)).astype(np.int64)
+            self.csr[r] = (cell_ids, offs, owner[at], full[at])
 
     # ---- batch kernels ----
 
     def candidates(self, lon: np.ndarray, lat: np.ndarray):
         """→ (pt_idx, zone_id, full) candidate triples for a point batch."""
-        n = len(lon)
         if not self.res_list:
             return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, bool))
         finest = max(self.res_list)
@@ -211,20 +268,18 @@ class ZoneIndex:
             first[1:] = pts_o[1:] != pts_o[:-1]
             out[pts_o[first]] = zs[order][first]
 
-        if knn_fallback and (out == -1).any() and len(self.centroid_ids):
-            miss = np.nonzero(out == -1)[0]
-            # brute-force nearest centroid (zone dim is broadcast-scale;
-            # the scale path would pre-bucket centroids by coarse cell)
-            d2 = (lon[miss, None] - self.centroid_x[None, :]) ** 2 + (
-                lat[miss, None] - self.centroid_y[None, :]
-            ) ** 2
-            out[miss] = self.centroid_ids[np.argmin(d2, axis=1)]
+        miss = np.flatnonzero(out == -1)
+        if knn_fallback and len(miss) and len(self.centres[0]):
+            out[miss] = _nearest_centre(lon[miss], lat[miss], self.centres)
         return out
 
 
 def build_zone_index(zones: DataFrame, max_cells: int | None = None) -> ZoneIndex:
-    rows = [r.asDict(recursive=True) for r in zones.select("id", "zone_type", "rings").collect()]
-    return ZoneIndex(rows, max_cells)
+    """The broadcast path's index: the zone rows are built on executors
+    and fetched over Arrow; the driver only assembles them."""
+    if max_cells is None:
+        max_cells = auto_max_cells(zones.count())
+    return ZoneIndex(_zone_index_rows(zones, max_cells).toArrow())
 
 
 # ---------------------------------------------------------------------------
@@ -347,12 +402,12 @@ def assign_zones(
     """points + zone_id (long, -1 if unassigned and no kNN fallback).
 
     strategy:
-      * ``broadcast`` — compile the zone dim into a per-cell index on the
-        driver, broadcast once, ONE narrow mapInPandas over the fact
-        side (zero shuffles; the default — zone dims are broadcast-scale
-        by design);
+      * ``broadcast`` — fetch the zone index rows, assemble the per-cell
+        index on the driver, broadcast once, ONE narrow mapInPandas over
+        the fact side (zero shuffles; the default — zone dims are
+        broadcast-scale by design);
       * ``partitioned`` — no driver collect / no geometry broadcast:
-        points join the zones' (res, cell) keys, boundary candidates
+        points join the same zone index rows' (res, cell) keys, boundary candidates
         refine in a cogroup keyed by (zone, split) and a per-point
         argmin resolves the zone. Requires ``id_col`` (a unique point
         key).
@@ -404,69 +459,6 @@ def assign_zones(
     return points.mapInPandas(_assign, out_schema)
 
 
-_ZONE_CELLS_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "cells",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("res", T.IntegerType()),
-                        T.StructField("cell", T.LongType()),
-                        T.StructField("full", T.BooleanType()),
-                    ]
-                )
-            ),
-        ),
-        # rings flattened to binary: the nested rings struct segfaults
-        # pyspark's cogroup Arrow deserializer (mapInPandas is fine);
-        # the flat encoding also shrinks the shuffle payload
-        T.StructField("rings_bin", T.BinaryType()),
-        # geom.area of the SAME numpy rings the broadcast ZoneIndex
-        # uses — bit-identical argmin tie-break across both strategies
-        T.StructField("area", T.DoubleType()),
-    ]
-)
-
-
-def _zone_cells_with_full(zones: DataFrame, max_cells: int) -> DataFrame:
-    """(zone_id, rank, area, rings_bin, cells) — one row per zone; the
-    distributed twin of the ZoneIndex, kept as a DataFrame instead of a
-    driver-pickled broadcast. ``cells`` holds the zone's (res, cell,
-    full) index entries."""
-    from cosmospark.hierarchy import type_rank_col
-
-    @F.pandas_udf(_ZONE_CELLS_SCHEMA)
-    def _cells(rings_s: pd.Series) -> pd.DataFrame:
-        out = []
-        for rows in rings_s:
-            if rows is None or len(rows) == 0:
-                out.append({"cells": [], "rings_bin": b"", "area": 0.0})
-                continue
-            rr = geom.rows_to_rings(rows)
-            minx, miny, maxx, maxy = geom.bbox(rr)
-            res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
-            cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-            if len(cc):
-                cminx, cminy, cmaxx, cmaxy = cells.cell_bounds_batch(cc, res)
-                fv = geom.rects_fully_covered(cminx, cminy, cmaxx, cmaxy, rr)
-            else:
-                fv = np.zeros(0, dtype=bool)
-            acc = [
-                {"res": res, "cell": int(c), "full": bool(f)}
-                for c, f in zip(cc, fv)
-            ]
-            out.append(
-                {"cells": acc, "rings_bin": geom.pack_rings(rr), "area": geom.area(rr)}
-            )
-        return pd.DataFrame(out)
-
-    rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(len(TYPE_RANK)))
-    return zones.select(
-        F.col("id").alias("zone_id"), rank.alias("rank"), _cells("rings").alias("rc")
-    ).select("zone_id", "rank", "rc.area", "rc.rings_bin", "rc.cells")
-
-
 def assign_zones_partitioned(
     points: DataFrame,
     zones: DataFrame,
@@ -506,13 +498,14 @@ def assign_zones_partitioned(
     # localCheckpoint, not .cache(): blocks free with the plan via the
     # ContextCleaner instead of accumulating catalog entries across
     # composed query invocations (ADVICE r3 lifecycle rule)
-    zrows = _zone_cells_with_full(zones, index_max_cells).localCheckpoint(eager=True)
+    zrows = _zone_index_rows(zones, index_max_cells).localCheckpoint(eager=True)
     # the key rows take a fresh zone_id attribute: zrows feeds both
     # sides of the refine cogroup, which must not share expression ids
     zkeys = zrows.select(
-        F.col("zone_id").alias("zone_id"), "rank", "area", F.explode("cells").alias("e")
+        "res", F.col("zone_id").alias("zone_id"), "rank", "area",
+        F.explode(F.arrays_zip("cells", "full")).alias("e"),
     ).select(
-        F.col("e.res").alias("res"), F.col("e.cell").alias("cell"),
+        "res", F.col("e.cells").alias("cell"),
         "zone_id", "rank", "area", F.col("e.full").alias("full"),
     )
     # one tiny agg gives the resolution list AND the cell count that
@@ -626,33 +619,25 @@ def assign_zones_partitioned(
     ).withColumn("zone_id", F.coalesce(F.col("zone_id"), F.lit(-1)).cast("long"))
 
     if knn_fallback:
-        # centroids are tiny at any scale → always broadcastable
-        cent_rows = [
-            (int(r["id"]), r["center"]["lon"], r["center"]["lat"])
-            for r in zones.select("id", "center").collect()
-            if r["center"] is not None
-        ]
-        if cent_rows:
-            ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-            cx = np.array([r[1] for r in cent_rows], dtype=np.float64)
-            cy = np.array([r[2] for r in cent_rows], dtype=np.float64)
-            bc = spark.sparkContext.broadcast((ids, cx, cy))
-            out_schema = T.StructType(out.schema.fields)
+        # centres are tiny at any scale → always broadcastable
+        centres = _centres(zrows.select("zone_id", "center").toArrow())
+        if len(centres[0]):
+            bc = spark.sparkContext.broadcast(centres)
 
             def _knn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                kids, kx, ky = bc.value
                 for pdf in batches:
-                    miss = pdf["zone_id"].to_numpy() == -1
-                    if miss.any():
-                        lon = pdf.loc[miss, lon_col].to_numpy(dtype=np.float64)
-                        lat = pdf.loc[miss, lat_col].to_numpy(dtype=np.float64)
-                        d2 = (lon[:, None] - kx[None, :]) ** 2 + (lat[:, None] - ky[None, :]) ** 2
-                        vals = pdf["zone_id"].to_numpy().copy()
-                        vals[miss] = kids[np.argmin(d2, axis=1)]
-                        pdf["zone_id"] = vals
+                    zid = pdf["zone_id"].to_numpy().copy()
+                    miss = np.flatnonzero(zid == -1)
+                    if len(miss):
+                        zid[miss] = _nearest_centre(
+                            pdf[lon_col].to_numpy(dtype=np.float64)[miss],
+                            pdf[lat_col].to_numpy(dtype=np.float64)[miss],
+                            bc.value,
+                        )
+                        pdf["zone_id"] = zid
                     yield pdf
 
-            out = out.mapInPandas(_knn, out_schema)
+            out = out.mapInPandas(_knn, out.schema)
     return out
 
 
@@ -844,76 +829,6 @@ def salted_count(df: DataFrame, keys: list[str], n_salt: int = 16, salt_col: str
     return partial.groupBy(*keys).agg(F.sum("_c").alias("n"))
 
 
-def adaptive_salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    agg_exprs: dict[str, str],
-    hot_threshold_rows: int = 1_000_000,
-    max_salt: int = 256,
-    sample_fraction: float = 0.01,
-) -> DataFrame:
-    """Skew-adaptive two-phase aggregation: a cheap sampled first pass
-    estimates per-key row counts; only keys above ``hot_threshold_rows``
-    get salted, with a per-key salt factor proportional to their share
-    (the SURVEY §4 'per-cell n_salt from a first-pass count histogram').
-    Cold keys aggregate directly — no blanket salting overhead.
-
-    ``agg_exprs`` maps output column → SQL aggregate over the PARTIAL
-    results, where the partial pass pre-aggregates ``cnt`` (rows) and
-    every referenced input column must be sum-decomposable (count/sum —
-    the decomposable aggregates skew actually threatens; min/max don't
-    need salting at all).
-
-    Example::
-
-        adaptive_salted_agg(fact, ["zone_id"], {"n": "sum(cnt)"})
-    """
-    spark = df.sparkSession
-    est = (
-        df.sample(fraction=sample_fraction, seed=7)
-        .groupBy(*keys)
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") * (1.0 / sample_fraction) > hot_threshold_rows)
-        .collect()
-    )
-    hot = {
-        tuple(r[k] for k in keys): int(
-            min(max_salt, max(2, r["c"] / sample_fraction / hot_threshold_rows + 1))
-        )
-        for r in est
-    }
-    if hot:
-        # broadcast map of hot keys → salt factor (tiny by construction:
-        # only keys carrying ≥ hot_threshold_rows rows can be in it).
-        # Key values are stringified (None-safe) to match the join's
-        # cast-to-string probe — raw non-string values (the common
-        # zone_id long) would fail createDataFrame's string-schema check
-        # exactly when a hot key exists.
-        items = [
-            ([None if x is None else str(x) for x in k], v) for k, v in hot.items()
-        ]
-        hot_df = spark.createDataFrame(
-            [(k + [v]) for k, v in items],
-            ", ".join(f"_hk{i} string" for i in range(len(keys))) + ", _nsalt int",
-        )
-        cond = None
-        for i, k in enumerate(keys):
-            c = F.col(k).cast("string") == F.col(f"_hk{i}")
-            cond = c if cond is None else cond & c
-        salted = df.join(F.broadcast(hot_df), cond, "left").withColumn(
-            "_salt",
-            F.when(
-                F.col("_nsalt").isNotNull(),
-                F.pmod(F.xxhash64(*keys, F.monotonically_increasing_id()), F.col("_nsalt")),
-            ).otherwise(F.lit(0)),
-        )
-    else:
-        salted = df.withColumn("_salt", F.lit(0))
-    partial = salted.groupBy(*keys, "_salt").agg(F.count("*").alias("cnt"))
-    final_aggs = [F.expr(sql).alias(name) for name, sql in agg_exprs.items()]
-    return partial.groupBy(*keys).agg(*final_aggs)
-
-
 def adaptive_cell_split(
     pts: DataFrame,
     resolutions: tuple[int, ...] = (9, 13, 17),
@@ -923,8 +838,8 @@ def adaptive_cell_split(
 ) -> DataFrame:
     """ADAPTIVE CELL SPLITTING (north_rule: 'skew from megacity cells
     is handled with salted repartitioning and ADAPTIVE CELL SPLITTING'
-    — this is the second half; salting is ``salted_count`` /
-    ``adaptive_salted_agg``): assign every point its coarsest cell
+    — this is the second half; salting is ``salted_count``): assign
+    every point its coarsest cell
     whose population is ≤ ``max_rows_per_cell``, descending hot cells
     one resolution level at a time. The result columns ``res`` /
     ``cell`` form a partitioning key under which every partition holds

@@ -310,14 +310,6 @@ def mask_to_boxes(mask: bytes, px: int) -> np.ndarray:
     return np.array(boxes, dtype=np.int64).reshape(-1, 4)
 
 
-def boxes_to_mask(boxes: np.ndarray, px: int) -> np.ndarray:
-    """Inverse of ``mask_to_boxes`` (for the round-trip check)."""
-    m = np.zeros((px, px), dtype=bool)
-    for r0, c0, r1, c1 in boxes:
-        m[r0:r1, c0:c1] = True
-    return m
-
-
 _BITSET_SCHEMA = T.StructType(
     [
         T.StructField("zone_id", T.LongType()),

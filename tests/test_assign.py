@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from cosmospark import cells, geom
 from cosmospark.assign import (
-    ZoneIndex,
     assign_images,
     assign_zones,
     build_zone_index,
@@ -49,12 +48,12 @@ def lux_zones(spark):
 
 
 class TestZoneIndex:
-    def test_assign_matches_brute_force(self, lux_zones):
+    def test_assign_matches_brute_force(self, spark, lux_zones):
         rows = [
             r.asDict(recursive=True)
-            for r in lux_zones.select("id", "zone_type", "rings").collect()
+            for r in lux_zones.select("id", "osm_id", "zone_type", "rings").collect()
         ]
-        idx = ZoneIndex(rows)
+        idx = build_zone_index(spark.createDataFrame(rows, schema=ZONES_RAW_SCHEMA))
         rng = np.random.default_rng(11)
         lon = rng.uniform(1.0, 16.0, 3000)  # includes points outside the world
         lat = rng.uniform(43.0, 55.0, 3000)
@@ -69,7 +68,7 @@ class TestZoneIndex:
         n_full = sum(int(f.sum()) for (_, _, _, f) in idx.csr.values())
         assert n_full > 0
 
-    def test_hole_not_assigned(self):
+    def test_hole_not_assigned(self, spark):
         # a zone with a hole must NOT claim points inside the hole, even
         # when the hole is smaller than a FULL-marked cell (round-1 bug:
         # covers() missed holes → bbox_covered_by marked hole cells FULL)
@@ -77,8 +76,10 @@ class TestZoneIndex:
             (0, 0, np.array([0.0, 0, 10, 10]), np.array([0.0, 10, 10, 0])),
             (0, 1, np.array([4.0, 4, 6, 6]), np.array([4.0, 6, 6, 4])),
         ]
-        rows = [{"id": 1, "zone_type": "city", "rings": geom.rings_to_rows(donut)}]
-        idx = ZoneIndex(rows)
+        rows = [
+            {"id": 1, "osm_id": "r1", "zone_type": "city", "rings": geom.rings_to_rows(donut)}
+        ]
+        idx = build_zone_index(spark.createDataFrame(rows, schema=ZONES_RAW_SCHEMA))
         lon = np.array([5.0, 2.0, 4.0])  # hole center, solid part, hole edge
         lat = np.array([5.0, 2.0, 5.0])
         got = idx.assign(lon, lat)
@@ -89,6 +90,29 @@ class TestZoneIndex:
         # a point well outside every zone gets its nearest zone via kNN
         got = idx.assign(np.array([30.0]), np.array([60.0]), knn_fallback=True)
         assert got[0] != -1
+
+    @pytest.mark.parametrize("with_center", [True, False], ids=["center", "no_center_col"])
+    @pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+    def test_knn_uses_zone_center_on_both_paths(self, spark, strategy, with_center):
+        # A's own center (1.9, 1.0) is nearer the point than B's
+        # centroid (4, 1); A's polygon centroid (1, 1) is not. Both
+        # paths must measure from the center, as geo_knn_fallback's
+        # oracle does, and from the centroid when the zone table has no
+        # center column.
+        def square(zid, x0, center):
+            ring = [(0, 0, np.array([x0, x0, x0 + 2, x0 + 2]), np.array([0.0, 2, 2, 0]))]
+            return {"id": zid, "osm_id": f"r{zid}", "zone_type": "city", "center": center,
+                    "rings": geom.rings_to_rows(ring)}
+
+        zones = spark.createDataFrame(
+            [square(1, 0.0, {"lon": 1.9, "lat": 1.0}), square(2, 3.0, None)],
+            schema=ZONES_RAW_SCHEMA,
+        )
+        if not with_center:
+            zones = zones.drop("center")
+        pts = spark.createDataFrame([(0, 2.6, 5.0)], "pid long, lon double, lat double")
+        out = assign_zones(pts, zones, knn_fallback=True, strategy=strategy, id_col="pid")
+        assert [r["zone_id"] for r in out.collect()] == [1 if with_center else 2]
 
 
 def rows_with_types(zdf):
@@ -278,68 +302,6 @@ class TestAssignImagesAutoStrategy:
             ).collect()
         }
         assert auto == base
-
-
-class TestAdaptiveSaltedAgg:
-    def test_counts_match_plain_groupby(self, spark):
-        from cosmospark.assign import adaptive_salted_agg
-
-        # heavy skew: 80% of 60k rows on one key
-        df = spark.range(60_000).select(
-            F.when(F.col("id") % 10 < 8, F.lit("hot"))
-            .otherwise(F.concat(F.lit("k"), F.pmod("id", F.lit(7))))
-            .alias("k")
-        )
-        got = {
-            r["k"]: r["n"]
-            for r in adaptive_salted_agg(
-                df, ["k"], {"n": "cast(sum(cnt) as bigint)"},
-                hot_threshold_rows=5_000, sample_fraction=0.1,
-            ).collect()
-        }
-        exp = {
-            r["k"]: r["n"]
-            for r in df.groupBy("k").agg(F.count("*").alias("n")).collect()
-        }
-        assert got == exp
-        # the hot key really was salted: partial pass fanned it out
-        # (indirectly: results equal is the contract; fan-out is plan-level)
-
-    def test_no_hot_keys_degenerates_to_plain(self, spark):
-        from cosmospark.assign import adaptive_salted_agg
-
-        df = spark.range(1000).select(F.pmod("id", F.lit(10)).alias("k"))
-        got = {
-            r["k"]: r["n"]
-            for r in adaptive_salted_agg(
-                df, ["k"], {"n": "cast(sum(cnt) as bigint)"},
-                hot_threshold_rows=10_000_000,
-            ).collect()
-        }
-        assert got == {i: 100 for i in range(10)}
-
-    def test_hot_path_with_long_keys(self, spark):
-        # ADVICE r2: non-string keys (the docstring's own zone_id long
-        # example) used to TypeError in createDataFrame whenever a hot
-        # key was detected — the exact case the function exists for
-        from cosmospark.assign import adaptive_salted_agg
-
-        df = spark.range(60_000).select(
-            F.when(F.col("id") % 10 < 8, F.lit(42)).otherwise(F.pmod("id", F.lit(7)))
-            .cast("long").alias("zone_id")
-        )
-        got = {
-            r["zone_id"]: r["n"]
-            for r in adaptive_salted_agg(
-                df, ["zone_id"], {"n": "cast(sum(cnt) as bigint)"},
-                hot_threshold_rows=5_000, sample_fraction=0.1,
-            ).collect()
-        }
-        exp = {
-            r["zone_id"]: r["n"]
-            for r in df.groupBy("zone_id").agg(F.count("*").alias("n")).collect()
-        }
-        assert got == exp and got[42] > 40_000
 
 
 class TestWriteAssignmentsManifest:

@@ -123,9 +123,9 @@ class TestCheckpointResume:
             return spark.range(10).withColumnRenamed("id", "x")
 
         root = str(tmp_path)
-        df1 = ckpt.run_stage(spark, root, "s1", fn)
+        df1 = ckpt.run_stage_fp(spark, root, "s1", None, fn)
         assert df1.count() == 10
-        df2 = ckpt.run_stage(spark, root, "s1", fn)
+        df2 = ckpt.run_stage_fp(spark, root, "s1", None, fn)
         assert df2.count() == 10
         assert calls["n"] == 1  # second run resumed from snapshot
         m = ckpt.read_manifest(root, "s1")

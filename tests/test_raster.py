@@ -8,7 +8,6 @@ import pytest
 from cosmospark import cells, geom
 from cosmospark.cells import MERCATOR, QUADKEY
 from cosmospark.raster import (
-    boxes_to_mask,
     mask_to_boxes,
     rasterize_zones,
     unpack_mask,
@@ -99,6 +98,14 @@ def test_rasterize_tiles_mercator(rect_zone_df):
         yf = (ty * px + rr + 0.5) / (n * px)
         lat = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * yf))))
         assert ((lon >= 0.0) & (lon <= 90.0) & (lat >= 0.0) & (lat <= 45.0)).all()
+
+
+def boxes_to_mask(boxes: np.ndarray, px: int) -> np.ndarray:
+    """Reference inverse of ``mask_to_boxes``: paint each box."""
+    m = np.zeros((px, px), dtype=bool)
+    for r0, c0, r1, c1 in boxes:
+        m[r0:r1, c0:c1] = True
+    return m
 
 
 def test_mask_box_roundtrip():
