@@ -37,11 +37,13 @@ def _load_rules(spark, path: str | None):
         return load_libpostal_rules(spark, path)
     with open(path) as fh:
         spec = json.load(fh)
+    # a JSON spec's contained_by rows (country, container_osm_id,
+    # admin_level, zone_type) are depth-1 chains
     return make_rules(
         spark,
         [tuple(r) for r in spec.get("levels", [])],
         [tuple(r) for r in spec.get("id_overrides", [])],
-        [tuple(r) for r in spec.get("contained_by", [])],
+        [(cc, 1, [c], lvl, zt) for cc, c, lvl, zt in spec.get("contained_by", [])],
     )
 
 
@@ -204,7 +206,14 @@ def main(argv: list[str] | None = None) -> int:
     g = sub.add_parser("generate", help="build the zone hierarchy from zones_raw jsonl")
     g.add_argument("-i", "--input", required=True)
     g.add_argument("-o", "--output", required=True)
-    g.add_argument("--rules", default=None, help="rules JSON (levels/id_overrides/contained_by)")
+    g.add_argument(
+        "--rules",
+        default=None,
+        help="libpostal boundaries/osm folder of <cc>.yaml files, or a JSON "
+        "spec with levels [cc, admin_level, type], id_overrides "
+        "[cc, osm_id, type|null] and contained_by "
+        "[cc, container_osm_id, admin_level, type] rows",
+    )
     g.add_argument("--places", default=None, help="place-node jsonl for voronoi generation")
     g.add_argument("--filter-langs", default=None, help="comma-separated language filter")
     g.add_argument("--disable-voronoi", action="store_true")

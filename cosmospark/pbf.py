@@ -34,6 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from cosmospark.session import local_table
+
 # ---------------------------------------------------------------------------
 # minimal protobuf wire codec
 
@@ -413,6 +415,9 @@ OSM_UNION_SCHEMA = T.StructType(
     ]
 )
 
+_BLOB_SCHEMA = T.StructType(
+    [T.StructField("offset", T.LongType()), T.StructField("size", T.LongType())]
+)
 _MTYPE = {"node": 0, "way": 1, "relation": 2}
 _UNION_COLS = ["kind", "id", "lon", "lat", "tags", "node_ids", "members"]
 
@@ -424,8 +429,8 @@ def scan_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
     (round 2 ran 5 independent scans — 5× IO + zlib + decode of the
     same planet file, ADVICE r2)."""
     idx = [b for b in blob_index(path) if b["type"] == "OSMData"]
-    blobs = spark.createDataFrame(
-        [(b["offset"], b["size"]) for b in idx], "offset long, size long"
+    blobs = local_table(
+        spark, [(b["offset"], b["size"]) for b in idx], _BLOB_SCHEMA
     ).repartition(max(1, min(len(idx), spark.sparkContext.defaultParallelism)))
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

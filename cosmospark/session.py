@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 def get_spark(
@@ -58,3 +58,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side row tuples (in ``schema`` order) as a JVM-local
+    relation: the plan is a ``LocalTableScan``, so no scan of it starts a
+    Python worker (a list-built ``createDataFrame`` re-runs a Python
+    ``map`` per partition on every scan). Built from Arrow because an
+    empty pandas frame falls back to the Python RDD path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

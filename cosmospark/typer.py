@@ -11,23 +11,29 @@ Reimplements:
   1. per-osm-id override — may be an explicit NULL ("untyped", the
      libpostal way of removing a zone, zone_typer.rs:128-130);
   2. else the first inclusion container that has ``contained_by``
-     sub-rules: evaluate the sub-rules' admin_level map; a sub-rule
-     *miss* falls through to (3) (the ``and_then`` at
-     zone_typer.rs:147-157);
+     sub-rules: evaluate the sub-rules (their own id overrides, nested
+     containers, then admin_level map); a sub-rule *miss* falls through
+     to (3) (the ``and_then`` at zone_typer.rs:147-157);
   3. else the country's default admin_level map.
 
 The reference's "first container in inclusion order" depends on R-tree
 iteration order; we impose the deterministic equivalent: the most
 specific container (max admin_level, then min container id).
 
-Rules are tiny dimension tables (242 countries in libpostal) →
-``F.broadcast`` on every join; the zone side is the only distributed
-operand, so this scales to any zone-table size with zero shuffles.
+Rules come in one shape, the four tables of ``make_rules``: the default
+admin_level map, the id overrides, and the contained_by level and id
+maps keyed by their container chain (any nesting depth). They are tiny
+dimension tables (242 countries in libpostal), built as JVM-local
+relations and ``F.broadcast`` on every join; the zone side is the only
+distributed operand, so this scales to any zone-table size with zero
+shuffles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from cosmospark.session import local_table
 
 # sentinel for "explicitly untyped by libpostal" (override value null);
 # lets us distinguish Some(None) from no-override inside coalesce logic
@@ -47,56 +53,11 @@ RULES_ID_SCHEMA = T.StructType(
         T.StructField("zone_type", T.StringType(), True),  # NULL = explicitly untyped
     ]
 )
-RULES_CONTAINED_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("container_osm_id", T.StringType(), False),
-        T.StructField("admin_level", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), False),
-    ]
-)
-# id overrides scoped to a container's sub-rules (zone_typer.rs:196-204:
-# every CountryAdminTypeRules carries its own overrides.id map, and the
-# contained_by recursion checks it FIRST): "inside container, zone
-# osm_id types as zone_type (NULL = explicitly untyped)"
-RULES_CONTAINED_ID_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("container_osm_id", T.StringType(), False),
-        T.StructField("osm_id", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), True),
-    ]
-)
-# second nesting hop (zone_typer.rs:143-157 evaluates contained_by
-# RECURSIVELY; libpostal data nests at most one extra level in practice,
-# so two hops cover it — deeper nests raise at parse time rather than
-# silently mistype):
-# "inside outer_container, zones inside inner_container type by this map"
-RULES_CONTAINED2_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("outer_container_osm_id", T.StringType(), False),
-        T.StructField("inner_container_osm_id", T.StringType(), False),
-        T.StructField("admin_level", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), False),
-    ]
-)
-# id overrides scoped to the INNER (second-hop) container's sub-rules
-RULES_CONTAINED2_ID_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("outer_container_osm_id", T.StringType(), False),
-        T.StructField("inner_container_osm_id", T.StringType(), False),
-        T.StructField("osm_id", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), True),
-    ]
-)
-
-# normalized chain-keyed representation (r5: the generalized bounded
-# contained_by loop, VERDICT r4 #3): one table per rule kind for ALL
-# depths, keyed by the chain of container osm_ids from the outermost
-# hop inward. The legacy depth-1/-2 tables above remain accepted
-# make_rules inputs and are folded into these.
+# contained_by rules (zone_typer.rs:143-157, 196-204): one table per
+# rule kind for every nesting depth, keyed by the chain of container
+# osm_ids from the outermost hop inward. A chain's level map types the
+# zones inside it; its id map (checked first, NULL = explicitly untyped)
+# overrides single zones inside it.
 RULES_CHAIN_LEVELS_SCHEMA = T.StructType(
     [
         T.StructField("country", T.StringType(), False),
@@ -144,7 +105,7 @@ DEFAULT_CONTAINED_DEPTH = 2
 #
 # No YAML library ships in this environment, so a from-scratch parser of
 # exactly this subset (nested mappings, quoted/bare scalars, null,
-# comments) loads the same files into the three rule tables. The
+# comments) loads the same files into the four rule tables. The
 # sandbox's reference checkout has an empty libpostal submodule, so
 # tests drive the loader with the reference's own unit-test documents
 # (zone_typer.rs:247-331) — pointed at the real folder it loads all 242
@@ -304,33 +265,6 @@ def parse_libpostal_rules(
     }
 
 
-def parse_libpostal_yaml(country: str, text: str) -> tuple[list, list, list, list, list, list]:
-    """Legacy-shape wrapper over ``parse_libpostal_rules`` at the
-    default depth cap: one country file → (levels, id_overrides,
-    contained_by, contained_by2, contained_id_overrides,
-    contained_id_overrides2) tuples in the make_rules shape."""
-    parsed = parse_libpostal_rules(country, text, max_depth=2)
-    contained, contained2, contained_ids, contained_ids2 = [], [], [], []
-    for cc, depth, chain, lvl, zt in parsed["chain_levels"]:
-        if depth == 1:
-            contained.append((cc, chain[0], lvl, zt))
-        else:
-            contained2.append((cc, chain[0], chain[1], lvl, zt))
-    for cc, depth, chain, oid, zt in parsed["chain_ids"]:
-        if depth == 1:
-            contained_ids.append((cc, chain[0], oid, zt))
-        else:
-            contained_ids2.append((cc, chain[0], chain[1], oid, zt))
-    return (
-        parsed["levels"],
-        parsed["id_overrides"],
-        contained,
-        contained2,
-        contained_ids,
-        contained_ids2,
-    )
-
-
 def load_libpostal_rules(
     spark: SparkSession, folder: str, max_depth: int = DEFAULT_CONTAINED_DEPTH
 ) -> dict[str, DataFrame]:
@@ -341,10 +275,9 @@ def load_libpostal_rules(
     import os
     import warnings
 
-    levels: list = []
-    id_rules: list = []
-    chain_levels: list = []
-    chain_ids: list = []
+    rows: dict[str, list] = {
+        "levels": [], "id_overrides": [], "chain_levels": [], "chain_ids": []
+    }
     for name in sorted(os.listdir(folder)):
         if not (name.endswith(".yaml") or name.endswith(".yml")):
             continue
@@ -355,67 +288,31 @@ def load_libpostal_rules(
         except ValueError as e:
             warnings.warn(f"skipping rules file {name}: {e}", stacklevel=2)
             continue
-        levels.extend(parsed["levels"])
-        id_rules.extend(parsed["id_overrides"])
-        chain_levels.extend(parsed["chain_levels"])
-        chain_ids.extend(parsed["chain_ids"])
-    return make_rules(
-        spark,
-        levels,
-        id_rules,
-        contained_chain_levels=chain_levels,
-        contained_chain_ids=chain_ids,
-    )
+        for kind, kind_rows in parsed.items():
+            rows[kind].extend(kind_rows)
+    return make_rules(spark, **rows)
 
 
 def make_rules(
     spark: SparkSession,
     levels: list[tuple],
     id_overrides: list[tuple] = (),
-    contained_by: list[tuple] = (),
-    contained_by2: list[tuple] = (),
-    contained_id_overrides: list[tuple] = (),
-    contained_id_overrides2: list[tuple] = (),
-    contained_chain_levels: list[tuple] = (),
-    contained_chain_ids: list[tuple] = (),
+    chain_levels: list[tuple] = (),
+    chain_ids: list[tuple] = (),
 ) -> dict[str, DataFrame]:
-    """Build the rule-table dict. The legacy depth-1/-2 argument shapes
-    and the generalized chain shapes ((country, depth, chain, ...,
-    zone_type), any depth) are both accepted; everything is folded into
-    the normalized ``contained_levels`` / ``contained_ids`` tables that
-    ``type_zones`` consumes. The legacy per-depth tables remain in the
-    dict (built from the legacy args only) for callers that inspect
-    them."""
-    chain_levels = [
-        (cc, 1, [outer], lvl, zt) for cc, outer, lvl, zt in contained_by
-    ] + [
-        (cc, 2, [outer, inner], lvl, zt)
-        for cc, outer, inner, lvl, zt in contained_by2
-    ] + [tuple(r) for r in contained_chain_levels]
-    chain_ids = [
-        (cc, 1, [outer], oid, zt)
-        for cc, outer, oid, zt in contained_id_overrides
-    ] + [
-        (cc, 2, [outer, inner], oid, zt)
-        for cc, outer, inner, oid, zt in contained_id_overrides2
-    ] + [tuple(r) for r in contained_chain_ids]
+    """Build the four rule tables that ``type_zones`` reads: ``levels``
+    (country, admin_level, zone_type), ``id_overrides`` (country,
+    osm_id, zone_type) and the contained_by chain tables
+    ``contained_levels`` / ``contained_ids`` from (country, depth, chain,
+    admin_level | osm_id, zone_type) rows. The argument names are
+    ``parse_libpostal_rules``'s keys, so
+    ``make_rules(spark, **parse_libpostal_rules(cc, text))`` works. Each
+    table is a JVM-local relation (``session.local_table``)."""
     return {
-        "levels": spark.createDataFrame(list(levels), RULES_LEVELS_SCHEMA),
-        "id_overrides": spark.createDataFrame(list(id_overrides), RULES_ID_SCHEMA),
-        "contained_levels": spark.createDataFrame(
-            chain_levels, RULES_CHAIN_LEVELS_SCHEMA
-        ),
-        "contained_ids": spark.createDataFrame(chain_ids, RULES_CHAIN_ID_SCHEMA),
-        "contained_by": spark.createDataFrame(list(contained_by), RULES_CONTAINED_SCHEMA),
-        "contained_by2": spark.createDataFrame(
-            list(contained_by2), RULES_CONTAINED2_SCHEMA
-        ),
-        "contained_id_overrides": spark.createDataFrame(
-            list(contained_id_overrides), RULES_CONTAINED_ID_SCHEMA
-        ),
-        "contained_id_overrides2": spark.createDataFrame(
-            list(contained_id_overrides2), RULES_CONTAINED2_ID_SCHEMA
-        ),
+        "levels": local_table(spark, levels, RULES_LEVELS_SCHEMA),
+        "id_overrides": local_table(spark, id_overrides, RULES_ID_SCHEMA),
+        "contained_levels": local_table(spark, chain_levels, RULES_CHAIN_LEVELS_SCHEMA),
+        "contained_ids": local_table(spark, chain_ids, RULES_CHAIN_ID_SCHEMA),
     }
 
 
@@ -473,6 +370,14 @@ def assign_country(
     return zones.join(cc.withColumnRenamed("child", "id"), "id", "left")
 
 
+def _on_chain(cond, chain: str, n: int):
+    """``cond`` and: the chosen containers ``_ch1.._ch{n}`` are the first
+    ``n`` hops of the rule chain column ``chain``."""
+    for i in range(1, n + 1):
+        cond = cond & (F.col(f"_ch{i}") == F.element_at(F.col(chain), i))
+    return cond
+
+
 def type_zones(zones: DataFrame, inclusions: DataFrame, rules: dict[str, DataFrame]) -> DataFrame:
     """Set ``zone_type`` by the three-level libpostal precedence.
 
@@ -522,17 +427,14 @@ def type_zones(zones: DataFrame, inclusions: DataFrame, rules: dict[str, DataFra
         "left",
     ).drop("_ov_country", "_ov_osm_id")
 
-    # (2) contained_by: the generalized depth loop over the normalized
-    # chain-keyed tables (see make_rules)
-    clv = rules.get("contained_levels")
-    cid = rules.get("contained_ids")
-    max_d = 0
-    for t in (clv, cid):
-        if t is not None:
-            # rule-dim scalar (tiny broadcast table): the loop bound
-            d_max = t.agg(F.max("depth")).collect()[0][0]
-            if d_max is not None:
-                max_d = max(max_d, int(d_max))
+    # (2) contained_by: the bounded depth loop over the chain tables
+    clv = rules["contained_levels"]
+    cid = rules["contained_ids"]
+    chains = clv.select("country", "depth", "chain").unionByName(
+        cid.select("country", "depth", "chain")
+    )
+    # rule-dim scalar (local table): the loop bound
+    max_d = chains.agg(F.max("depth")).first()[0] or 0
 
     parent_ids = zones.select(
         F.col("id").alias("parent"),
@@ -548,17 +450,13 @@ def type_zones(zones: DataFrame, inclusions: DataFrame, rules: dict[str, DataFra
         # chains of length d that exist — via their own rule maps OR as
         # a prefix of a deeper chain (a container carrying only nested
         # rules must still be selectable, else its rules never apply)
-        chains_d = None
-        for t in (clv, cid):
-            if t is None:
-                continue
-            cd = t.filter(F.col("depth") >= d).select(
-                "country", F.slice("chain", 1, d).alias("chain")
+        chains_d = (
+            chains.filter(F.col("depth") >= d)
+            .select(
+                F.col("country").alias("_cb_country"),
+                F.slice("chain", 1, d).alias("_cb_chain"),
             )
-            chains_d = cd if chains_d is None else chains_d.unionByName(cd)
-        chains_d = chains_d.distinct().select(
-            F.col("country").alias("_cb_country"),
-            F.col("chain").alias("_cb_chain"),
+            .distinct()
         )
         cand = inclusions.join(parent_ids, "parent").join(child_cc, "child")
         if prefix_df is not None:
@@ -566,9 +464,7 @@ def type_zones(zones: DataFrame, inclusions: DataFrame, rules: dict[str, DataFra
         cond = (F.col("_cb_country") == F.col("_c_cc")) & (
             F.col("_p_osm_id") == F.element_at(F.col("_cb_chain"), d)
         )
-        for i in range(1, d):
-            cond = cond & (F.col(f"_ch{i}") == F.element_at(F.col("_cb_chain"), i))
-        cand = cand.join(F.broadcast(chains_d), cond)
+        cand = cand.join(F.broadcast(chains_d), _on_chain(cond, "_cb_chain", d - 1))
         # deterministic "most specific container": max admin_level, then
         # min container id (module docstring; replaces the reference's
         # R-tree iteration order)
@@ -584,46 +480,30 @@ def type_zones(zones: DataFrame, inclusions: DataFrame, rules: dict[str, DataFra
 
         # the chosen chain's rule maps at this depth: its scoped id
         # overrides (checked FIRST by the recursion) and its level map
-        if cid is not None:
-            idd = cid.filter(F.col("depth") == d).select(
-                F.col("country").alias("_ic_country"),
-                F.col("chain").alias("_ic_chain"),
-                F.col("osm_id").alias("_ic_osm_id"),
-                F.coalesce(F.col("zone_type"), F.lit(EXPLICIT_NONE)).alias(
-                    f"_id{d}_type"
-                ),
-            )
-            cond_i = (F.col("country_code") == F.col("_ic_country")) & (
-                F.col("osm_id") == F.col("_ic_osm_id")
-            )
-            for i in range(1, d + 1):
-                cond_i = cond_i & (
-                    F.col(f"_ch{i}") == F.element_at(F.col("_ic_chain"), i)
-                )
-            z = z.join(F.broadcast(idd), cond_i, "left").drop(
-                "_ic_country", "_ic_chain", "_ic_osm_id"
-            )
-        else:
-            z = z.withColumn(f"_id{d}_type", F.lit(None).cast("string"))
-        if clv is not None:
-            lvd = clv.filter(F.col("depth") == d).select(
-                F.col("country").alias("_lc_country"),
-                F.col("chain").alias("_lc_chain"),
-                F.col("admin_level").alias("_lc_level"),
-                F.col("zone_type").alias(f"_lv{d}_type"),
-            )
-            cond_l = (F.col("country_code") == F.col("_lc_country")) & (
-                lvl == F.col("_lc_level")
-            )
-            for i in range(1, d + 1):
-                cond_l = cond_l & (
-                    F.col(f"_ch{i}") == F.element_at(F.col("_lc_chain"), i)
-                )
-            z = z.join(F.broadcast(lvd), cond_l, "left").drop(
-                "_lc_country", "_lc_chain", "_lc_level"
-            )
-        else:
-            z = z.withColumn(f"_lv{d}_type", F.lit(None).cast("string"))
+        idd = cid.filter(F.col("depth") == d).select(
+            F.col("country").alias("_ic_country"),
+            F.col("chain").alias("_ic_chain"),
+            F.col("osm_id").alias("_ic_osm_id"),
+            F.coalesce(F.col("zone_type"), F.lit(EXPLICIT_NONE)).alias(f"_id{d}_type"),
+        )
+        cond_i = (F.col("country_code") == F.col("_ic_country")) & (
+            F.col("osm_id") == F.col("_ic_osm_id")
+        )
+        z = z.join(F.broadcast(idd), _on_chain(cond_i, "_ic_chain", d), "left").drop(
+            "_ic_country", "_ic_chain", "_ic_osm_id"
+        )
+        lvd = clv.filter(F.col("depth") == d).select(
+            F.col("country").alias("_lc_country"),
+            F.col("chain").alias("_lc_chain"),
+            F.col("admin_level").alias("_lc_level"),
+            F.col("zone_type").alias(f"_lv{d}_type"),
+        )
+        cond_l = (F.col("country_code") == F.col("_lc_country")) & (
+            lvl == F.col("_lc_level")
+        )
+        z = z.join(F.broadcast(lvd), _on_chain(cond_l, "_lc_chain", d), "left").drop(
+            "_lc_country", "_lc_chain", "_lc_level"
+        )
         drop_cols += [f"_ch{d}", f"_id{d}_type", f"_lv{d}_type"]
 
     # (3) country default admin_level map

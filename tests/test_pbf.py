@@ -181,6 +181,13 @@ class TestSinglePassScan:
         for (rid, nid), seq in got.items():
             assert members_by_rel[rid][seq] == ("node", nid)
 
+    def test_blob_table_is_local_scan(self, spark, tmp_path):
+        # the blob list is a JVM-local relation: only the decode stage
+        # runs Python, the source scan does not
+        path, _ = _world_as_pbf(tmp_path)
+        plan = pbf.scan_osm_pbf(spark, path)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
     def test_snapshot_dir_reads_back(self, spark, tmp_path):
         path, w = _world_as_pbf(tmp_path)
         snap = str(tmp_path / "osm_union")

@@ -4,7 +4,14 @@ reference (src/zone_typer.rs:422-501) plus the country finder."""
 import pytest
 from pyspark.sql import functions as F
 
-from cosmospark.typer import assign_country, clean_untagged_zones, make_rules, type_zones
+from cosmospark.typer import (
+    DEFAULT_CONTAINED_DEPTH,
+    assign_country,
+    clean_untagged_zones,
+    make_rules,
+    parse_libpostal_rules,
+    type_zones,
+)
 
 # the complex_rules() yaml (zone_typer.rs:397-417) as rule tables
 LEVELS = [
@@ -20,8 +27,8 @@ ID_OVERRIDES = [
     ("FR", "relation:z4", None),  # explicit removal
     ("FR", "relation:z5", "city_district"),
 ]
-CONTAINED_BY = [
-    ("FR", "relation:big_zone", "9", "suburb"),
+CHAIN_LEVELS = [
+    ("FR", 1, ["relation:big_zone"], "9", "suburb"),
 ]
 
 ZONES = [
@@ -57,16 +64,19 @@ EXPECTED = {
 }
 
 
-@pytest.fixture(scope="module")
-def typed(spark):
+def _golden_typing(spark, rules) -> dict:
     zones = spark.createDataFrame(
         [(i, o, l, "FR") for i, o, l in ZONES],
         "id long, osm_id string, admin_level int, country_code string",
     )
     inclusions = spark.createDataFrame(INCLUSIONS, "child long, parent long")
-    rules = make_rules(spark, LEVELS, ID_OVERRIDES, CONTAINED_BY)
     out = type_zones(zones, inclusions, rules)
     return {r["osm_id"]: r["zone_type"] for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def typed(spark):
+    return _golden_typing(spark, make_rules(spark, LEVELS, ID_OVERRIDES, CHAIN_LEVELS))
 
 
 class TestTyper:
@@ -78,6 +88,57 @@ class TestTyper:
             [(0, "city"), (1, None)], "id long, zone_type string"
         )
         assert clean_untagged_zones(z).count() == 1
+
+
+class TestRuleTables:
+    """``make_rules`` builds exactly four JVM-local tables: a scan of a
+    rule table plans as ``LocalTableScan`` and starts no Python worker,
+    whether the table is empty or not."""
+
+    CHAIN_IDS = [("FR", 1, ["relation:big_zone"], "relation:z2", None)]
+
+    @pytest.mark.parametrize("rule_set", ["lux", "empty", "full"])
+    def test_tables_plan_as_local_scans(self, spark, rule_set):
+        from cosmospark.fixtures import LUX_RULES_LEVELS
+
+        args = {
+            "lux": (LUX_RULES_LEVELS,),
+            "empty": ([],),
+            "full": (LEVELS, ID_OVERRIDES, CHAIN_LEVELS, self.CHAIN_IDS),
+        }[rule_set]
+        rules = make_rules(spark, *args)
+        assert sorted(rules) == ["contained_ids", "contained_levels", "id_overrides", "levels"]
+        for name, table in rules.items():
+            plan = table._jdf.queryExecution().executedPlan().toString()
+            assert plan.startswith("LocalTableScan"), (name, plan)
+        if rule_set == "full":
+            got = {name: [tuple(r) for r in t.collect()] for name, t in rules.items()}
+            assert got == {
+                "levels": LEVELS,
+                "id_overrides": ID_OVERRIDES,
+                "contained_levels": CHAIN_LEVELS,
+                "contained_ids": self.CHAIN_IDS,
+            }
+
+    def test_cli_json_contained_by_row_types_like_chain_row(self, spark, tmp_path, typed):
+        # a `generate --rules spec.json` contained_by row is a depth-1 chain
+        import json
+
+        from cosmospark.__main__ import _load_rules
+
+        spec = tmp_path / "rules.json"
+        spec.write_text(
+            json.dumps(
+                {
+                    "levels": LEVELS,
+                    "id_overrides": ID_OVERRIDES,
+                    "contained_by": [["FR", "relation:big_zone", "9", "suburb"]],
+                }
+            )
+        )
+        got = _golden_typing(spark, _load_rules(spark, str(spec)))
+        assert got["relation:z3"] == "suburb"  # inside big_zone, level 9
+        assert got == typed
 
 
 class TestCountryFinder:
@@ -165,33 +226,25 @@ class TestLibpostalYaml:
 '''
 
     def test_basic(self):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, contained, contained2, contained_ids, contained_ids2 = parse_libpostal_yaml("lu", self.BASIC)
-        assert ("LU", "3", "country") in levels
-        assert ("LU", "5", "city_district") in levels
-        assert ids == [] and contained == []
+        parsed = parse_libpostal_rules("lu", self.BASIC)
+        assert ("LU", "3", "country") in parsed["levels"]
+        assert ("LU", "5", "city_district") in parsed["levels"]
+        assert parsed["id_overrides"] == [] and parsed["chain_levels"] == []
 
     def test_invalid_indent_rejected(self):
         # zone_typer.rs:277-293: 'overrides' mis-indented INSIDE the
         # admin_level map → its value is a nested map where a zone-type
         # string is required → error (file skipped by the folder loader)
-        from cosmospark.typer import parse_libpostal_yaml
-
         with pytest.raises(ValueError):
-            parse_libpostal_yaml("xx", self.KO)
+            parse_libpostal_rules("xx", self.KO)
 
     def test_contained_by(self):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, contained, contained2, contained_ids, contained_ids2 = parse_libpostal_yaml("lu", self.CONTAINED)
-        assert ("LU", "2", "country") in levels
-        assert ("LU", "relation:407489", "9", "city_district") in contained
+        parsed = parse_libpostal_rules("lu", self.CONTAINED)
+        assert ("LU", "2", "country") in parsed["levels"]
+        assert ("LU", 1, ["relation:407489"], "9", "city_district") in parsed["chain_levels"]
 
     def test_id_overrides_with_explicit_null(self):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, contained, contained2, contained_ids, contained_ids2 = parse_libpostal_yaml("lu", self.ID_OVERRIDES)
+        ids = parse_libpostal_rules("lu", self.ID_OVERRIDES)["id_overrides"]
         assert ("LU", "relation:1803923", "city_district") in ids
         assert ("LU", "relation:42", None) in ids
 
@@ -260,15 +313,13 @@ overrides:
 """
 
     def test_parse_two_levels(self):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, cb, cb2, cbi, cbi2 = parse_libpostal_yaml("fr", self.TWO_LEVEL_YAML)
-        assert ("FR", "relation:100", "8", "state_district") in cb
-        assert cb2 == [("FR", "relation:100", "relation:200", "8", "suburb")]
+        chain_levels = parse_libpostal_rules("fr", self.TWO_LEVEL_YAML)["chain_levels"]
+        assert ("FR", 1, ["relation:100"], "8", "state_district") in chain_levels
+        assert [r for r in chain_levels if r[1] == 2] == [
+            ("FR", 2, ["relation:100", "relation:200"], "8", "suburb")
+        ]
 
     def test_parse_three_levels_rejected(self):
-        from cosmospark.typer import parse_libpostal_yaml
-
         bad = self.TWO_LEVEL_YAML + (
             "                overrides:\n"
             "                  contained_by:\n"
@@ -278,13 +329,10 @@ overrides:
             '                          "8": city_district\n'
         )
         with pytest.raises(ValueError, match="deeper than 2"):
-            parse_libpostal_yaml("fr", bad)
+            parse_libpostal_rules("fr", bad)
 
     def test_second_hop_typing(self, spark):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, cb, cb2, cbi, cbi2 = parse_libpostal_yaml("fr", self.TWO_LEVEL_YAML)
-        rules = make_rules(spark, levels, ids, cb, cb2, cbi, cbi2)
+        rules = make_rules(spark, **parse_libpostal_rules("fr", self.TWO_LEVEL_YAML))
         # zone 1: inside outer 100 AND inner 200 → suburb (inner hop)
         # zone 2: inside outer 100 only → state_district (outer sub-map)
         # zone 3: inside neither → city (country default)
@@ -333,12 +381,10 @@ overrides:
 """
 
     def test_sub_id_override_precedence(self, spark):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        levels, ids, cb, cb2, cbi, cbi2 = parse_libpostal_yaml("fr", self.YAML)
-        assert ("FR", "relation:100", "relation:1", "suburb") in cbi
-        assert ("FR", "relation:100", "relation:2", None) in cbi
-        rules = make_rules(spark, levels, ids, cb, cb2, cbi, cbi2)
+        parsed = parse_libpostal_rules("fr", self.YAML)
+        assert ("FR", 1, ["relation:100"], "relation:1", "suburb") in parsed["chain_ids"]
+        assert ("FR", 1, ["relation:100"], "relation:2", None) in parsed["chain_ids"]
+        rules = make_rules(spark, **parsed)
         zones = spark.createDataFrame(
             [
                 (1, "relation:1", 8, "FR"),   # sub id override → suburb
@@ -380,10 +426,7 @@ overrides:
 """
 
     def test_id_only_container_applies(self, spark):
-        from cosmospark.typer import parse_libpostal_yaml
-
-        parsed = parse_libpostal_yaml("fr", self.ONLY_IDS)
-        rules = make_rules(spark, *parsed)
+        rules = make_rules(spark, **parse_libpostal_rules("fr", self.ONLY_IDS))
         zones = spark.createDataFrame(
             [(1, "relation:1", 8, "FR"), (10, "relation:100", 4, "FR")],
             "id long, osm_id string, admin_level int, country_code string",
@@ -421,11 +464,10 @@ overrides:
         """Depth-2 id overrides: the inner container's own id map wins
         over its level map; inner explicit NULL falls past the inner
         rules to the OUTER container's level map (Option flattening)."""
-        from cosmospark.typer import parse_libpostal_yaml
-
-        parsed = parse_libpostal_yaml("fr", self.INNER_IDS)
-        assert ("FR", "relation:100", "relation:200", "relation:1", "suburb") in parsed[5]
-        rules = make_rules(spark, *parsed)
+        parsed = parse_libpostal_rules("fr", self.INNER_IDS)
+        chain2 = ["relation:100", "relation:200"]
+        assert ("FR", 2, chain2, "relation:1", "suburb") in parsed["chain_ids"]
+        rules = make_rules(spark, **parsed)
         zones = spark.createDataFrame(
             [
                 (1, "relation:1", 8, "FR"),  # inner id override → suburb
@@ -488,16 +530,12 @@ overrides:
 """
 
     def test_default_cap_rejects_depth3(self):
-        from cosmospark.typer import parse_libpostal_rules, parse_libpostal_yaml
-
-        with pytest.raises(ValueError, match="deeper than 2"):
-            parse_libpostal_yaml("fr", self.THREE_LEVEL_YAML)
         with pytest.raises(ValueError, match="deeper than 2"):
             parse_libpostal_rules("fr", self.THREE_LEVEL_YAML)
+        with pytest.raises(ValueError, match="deeper than 2"):
+            parse_libpostal_rules("fr", self.THREE_LEVEL_YAML, max_depth=DEFAULT_CONTAINED_DEPTH)
 
     def test_parse_depth3_chains(self):
-        from cosmospark.typer import parse_libpostal_rules
-
         parsed = parse_libpostal_rules("fr", self.THREE_LEVEL_YAML, max_depth=3)
         chain3 = ["relation:100", "relation:200", "relation:300"]
         assert ("FR", 3, chain3, "9", "initial_township") in parsed["chain_levels"]
@@ -506,16 +544,8 @@ overrides:
         assert ("FR", 1, ["relation:100"], "9", "suburb") in parsed["chain_levels"]
 
     def test_depth3_typing(self, spark):
-        from cosmospark.typer import parse_libpostal_rules
-
         parsed = parse_libpostal_rules("fr", self.THREE_LEVEL_YAML, max_depth=3)
-        rules = make_rules(
-            spark,
-            parsed["levels"],
-            parsed["id_overrides"],
-            contained_chain_levels=parsed["chain_levels"],
-            contained_chain_ids=parsed["chain_ids"],
-        )
+        rules = make_rules(spark, **parsed)
         # container zones: 100 (lvl 4) ⊃ 200 (lvl 6) ⊃ 300 (lvl 8)
         zones = spark.createDataFrame(
             [
