@@ -397,7 +397,6 @@ def assign_zones(
     strategy: str = "broadcast",
     id_col: str | None = None,
     broadcast_budget_bytes: int = BROADCAST_BUDGET_BYTES,
-    raster_res: int = 9,
 ) -> DataFrame:
     """points + zone_id (long, -1 if unassigned and no kNN fallback).
 
@@ -413,20 +412,11 @@ def assign_zones(
         key).
         This is the fallback for zone tables above broadcast budget
         (planet-scale detailed geometry can be tens of GB);
-      * ``raster`` — PIXEL-APPROXIMATE assignment via the per-cell
-        pixel LUT (``raster.zone_pixel_lut``): zero Python and zero
-        shuffle on the fact side; half-pixel boundary error at
-        ``raster_res`` (see ``raster.assign_zones_raster``);
-      * ``auto`` — measure the geometry size JVM-side and pick an exact
-        strategy (never the approximate raster path).
-    """
-    if strategy == "raster":
-        from cosmospark.raster import assign_zones_raster
+      * ``auto`` — measure the geometry size JVM-side and pick one of
+        the two.
 
-        return assign_zones_raster(
-            points, zones, res=raster_res, lon_col=lon_col, lat_col=lat_col,
-            id_col=id_col or "pid",
-        )
+    The pixel-approximate raster join is ``raster.assign_zones_raster``.
+    """
     if strategy == "auto":
         est = estimate_zone_geom_bytes(zones)
         strategy = (

@@ -83,7 +83,7 @@ def compute_names(zones: DataFrame) -> DataFrame:
 def parent_chain(zones: DataFrame) -> DataFrame:
     """(id, anc, depth): every zone with its ancestor chain, self at
     depth 0 — the relational form of iter_hierarchy."""
-    parents = zones.select(F.col("id").alias("anc"), F.col("parent").alias("next_anc")).cache()
+    parents = zones.select(F.col("id").alias("anc"), F.col("parent").alias("next_anc"))
     level = zones.select(F.col("id"), F.col("id").alias("anc"), F.lit(0).alias("depth"))
     chain = level
     for d in range(1, MAX_DEPTH + 1):

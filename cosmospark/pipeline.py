@@ -306,15 +306,13 @@ def build_zones(
         return z
 
     zones = _stage("prep", _prep)
-    zones = zones.cache()
-
-    inclusions = _stage("inclusions", lambda: find_inclusions(zones)).cache()
+    inclusions = _stage("inclusions", lambda: find_inclusions(zones))
 
     def _typed():
         z = assign_country(zones, inclusions, rules, country_code=country_code)
         return type_zones(z, inclusions, rules)
 
-    typed = _stage("typed", _typed).cache()
+    typed = _stage("typed", _typed)
 
     if stats is not None:
         from cosmospark.typer import typing_stats

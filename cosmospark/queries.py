@@ -21,6 +21,7 @@ from cosmospark import cells, s2
 from cosmospark.assign import assign_zones, encode_points, rollup_cells
 from cosmospark.fixtures import four_squares_zones, lux_world
 from cosmospark.hierarchy import build_hierarchy, find_inclusions, with_bbox_and_area
+from cosmospark.session import local_table
 from cosmospark.ztypes import TYPE_RANK, ZONES_RAW_SCHEMA
 
 # ---------------------------------------------------------------------------
@@ -62,8 +63,7 @@ def _lux_typed_rows() -> tuple:
 
 
 def _lux_typed_zones(spark: SparkSession) -> DataFrame:
-    rows = [r for _, r in _lux_typed_rows()]
-    return spark.createDataFrame(rows, schema=ZONES_RAW_SCHEMA)
+    return local_table(spark, [r for _, r in _lux_typed_rows()], ZONES_RAW_SCHEMA)
 
 
 def _zones_values_sql() -> str:
@@ -549,7 +549,7 @@ def q_geo_parent_hierarchy(spark, sf_dir):
     the reference's own four-squares fixture
     (src/hierarchy_builder.rs:157-217)."""
     zones = with_bbox_and_area(
-        spark.createDataFrame(four_squares_zones(), schema=ZONES_RAW_SCHEMA)
+        local_table(spark, four_squares_zones(), ZONES_RAW_SCHEMA)
     ).localCheckpoint(eager=True)  # the zone lineage fans out ~10× inside the joins
     inclusions = find_inclusions(zones)
     out = build_hierarchy(zones, inclusions)
@@ -653,11 +653,12 @@ def q_geo_zone_type(spark, sf_dir):
     own 8-zone scenario (zone_typer.rs:422-501)."""
     from cosmospark.typer import make_rules, type_zones
 
-    zones = spark.createDataFrame(
+    zones = local_table(
+        spark,
         [(i, o, l, "FR") for i, o, l in TYPER_ZONES],
         "id long, osm_id string, admin_level int, country_code string",
     )
-    incl = spark.createDataFrame(TYPER_INCLUSIONS, "child long, parent long")
+    incl = local_table(spark, TYPER_INCLUSIONS, "child long, parent long")
     chain_levels = [(c, 1, [o], l, t) for c, o, l, t in TYPER_CONTAINED]
     rules = make_rules(spark, TYPER_LEVELS, TYPER_ID_OV, chain_levels)
     return type_zones(zones, incl, rules).select("osm_id", "zone_type").orderBy("osm_id")
@@ -709,9 +710,8 @@ def q_geo_full_labels(spark, sf_dir):
     from cosmospark.fixtures import LUX_RULES_LEVELS, lux_world
     from cosmospark.pipeline import build_zones
     from cosmospark.typer import make_rules
-    from cosmospark.ztypes import ZONES_RAW_SCHEMA
 
-    raw = spark.createDataFrame(lux_world(), schema=ZONES_RAW_SCHEMA)
+    raw = local_table(spark, lux_world(), ZONES_RAW_SCHEMA)
     rules = make_rules(spark, LUX_RULES_LEVELS)
     out = build_zones(spark, raw, rules)
     return out.select("osm_id", "zone_type", "label").orderBy("osm_id")
@@ -780,7 +780,7 @@ def q_geo_osm_extract(spark, sf_dir):
     from cosmospark.pipeline import extract_zones_from_osm
 
     w = lux_osm_world()
-    dfs = {k: spark.createDataFrame(w[k], _OSM_SCHEMAS[k]) for k in _OSM_SCHEMAS}
+    dfs = {k: local_table(spark, w[k], _OSM_SCHEMAS[k]) for k in _OSM_SCHEMAS}
     ext = extract_zones_from_osm(
         dfs["relations"], dfs["rel_members"], dfs["ways"], dfs["nodes"],
         dfs["rel_node_members"],
@@ -868,13 +868,15 @@ def q_geo_voronoi_cells(spark, sf_dir):
         "parent": None,
         "rings": [{"poly": 0, "ring": 0, "xs": lx, "ys": ly}],
     }
-    zones = spark.createDataFrame(
+    zones = local_table(
+        spark,
         [parent],
         "id long, osm_id string, name string, zone_type string, "
         "parent long, rings array<struct<poly:int,ring:int,"
         "xs:array<double>,ys:array<double>>>",
     )
-    places = spark.createDataFrame(
+    places = local_table(
+        spark,
         [
             ("node:1", "P22", "suburb", None, 2.0, 2.0, {}),
             ("node:2", "P82", "suburb", None, 8.0, 2.0, {}),
@@ -4025,7 +4027,7 @@ def q_phash_neardup(spark, sf_dir):
     real positives (random-noise phashes are never within hamming 8)."""
     from cosmospark.ztypes import IMAGES_SCHEMA
 
-    imgs = spark.createDataFrame(_phash_fixture_rows(), schema=IMAGES_SCHEMA).select(
+    imgs = local_table(spark, _phash_fixture_rows(), IMAGES_SCHEMA).select(
         "image_id", "phash"
     )
     band_arr = F.array(
@@ -4088,7 +4090,7 @@ def q_phash_clusters(spark, sf_dir):
     pairs = q_phash_neardup(spark, sf_dir).select(
         nid("id_a").alias("na"), nid("id_b").alias("nb")
     )
-    imgs = spark.createDataFrame(_phash_fixture_rows(), schema=IMAGES_SCHEMA).select(
+    imgs = local_table(spark, _phash_fixture_rows(), IMAGES_SCHEMA).select(
         nid("image_id").alias("nid")
     )
     cc = connected_components(imgs, pairs, id_col="nid", src="na", dst="nb")
@@ -4139,7 +4141,7 @@ def q_image_zone_rollup(spark, sf_dir):
     boxes) makes the rollup's hot keys real."""
     from cosmospark.ztypes import IMAGES_SCHEMA
 
-    imgs = spark.createDataFrame(_phash_fixture_rows(), schema=IMAGES_SCHEMA)
+    imgs = local_table(spark, _phash_fixture_rows(), IMAGES_SCHEMA)
     zones = _lux_typed_zones(spark)
     a = assign_zones(imgs.select("image_id", "lon", "lat", "phash", "fmt"), zones)
     return (
@@ -5159,7 +5161,7 @@ def q_phash_zone_neardup(spark, sf_dir):
     the PIP assignment and the banding's recall claim."""
     from cosmospark.ztypes import IMAGES_SCHEMA
 
-    imgs = spark.createDataFrame(_phash_zone_fixture_rows(), schema=IMAGES_SCHEMA)
+    imgs = local_table(spark, _phash_zone_fixture_rows(), IMAGES_SCHEMA)
     zones = _lux_typed_zones(spark)
     a0 = assign_zones(imgs.select("image_id", "lon", "lat", "phash"), zones).filter(
         F.col("zone_id") >= 0
@@ -5360,7 +5362,7 @@ def q_audio_features(spark, sf_dir):
     DuckDB oracle from the SAME deterministic sample arithmetic."""
     from cosmospark import multimodal as mm
 
-    a = spark.createDataFrame(mm.gen_audio(_N_AUDIO, sample_rate=_AUDIO_SR), schema=mm.AUDIO_SCHEMA)
+    a = local_table(spark, mm.gen_audio(_N_AUDIO, sample_rate=_AUDIO_SR), mm.AUDIO_SCHEMA)
     return (
         mm.audio_features(a)
         .select("audio_id", "duration_sec", "bytes_ok", "rms", "zero_crossings", "clip_count")
@@ -5416,7 +5418,7 @@ def q_video_frames(spark, sf_dir):
     integer arithmetic of the fake codec)."""
     from cosmospark import multimodal as mm
 
-    v = spark.createDataFrame(mm.gen_video(_N_VIDEO), schema=mm.VIDEO_SCHEMA)
+    v = local_table(spark, mm.gen_video(_N_VIDEO), mm.VIDEO_SCHEMA)
     return (
         mm.video_frame_sample(v, every=_FRAME_EVERY)
         .select("video_id", "frame_idx", "first_px")
@@ -5446,133 +5448,120 @@ DRIVER_SAMPLE_CAP = 50  # external correctness gate samples this many, front-fir
 REGISTRY_TOTAL = 82  # asserted == len(queries()) in test_oracle_parity (ADVICE r5)
 
 
+# One (name, builder, oracle) record per query: builder(spark, sf_dir) is
+# the Spark DataFrame, oracle(sf_dir) its DuckDB SQL.
+#
+# ROTATION RULE: this order is the sample order of the external
+# correctness gate, which takes the first DRIVER_SAMPLE_CAP records. A
+# query whose builder or oracle changes must move into that window
+# before the gate's next run, so the gate re-validates every change.
+REGISTRY = (
+    ("geo_s2_encode", q_geo_s2_encode, lambda _: sql_geo_s2_encode()),
+    ("geo_s2_rollup", q_geo_s2_rollup, lambda _: sql_geo_s2_rollup()),
+    ("stratified_sample", q_stratified_sample, sql_stratified_sample),
+    ("term_stats_topk", q_term_stats_topk, lambda _: SQL_TERM_STATS),
+    ("geo_s2_range_scan", q_geo_s2_range_scan, lambda _: sql_geo_s2_range_scan()),
+    ("geo_s2_bbox_scan", q_geo_s2_bbox_scan, lambda _: sql_geo_s2_bbox_scan()),
+    ("decontaminate", q_decontaminate, lambda _: SQL_DECONTAMINATE),
+    ("sessionize", q_sessionize, lambda _: SQL_SESSIONIZE),
+    ("event_quantiles", q_event_quantiles, lambda _: SQL_EVENT_QUANTILES),
+    ("geo_radius_join", q_geo_radius_join, lambda _: sql_geo_radius_join()),
+    ("phash_zone_neardup", q_phash_zone_neardup, sql_phash_zone_neardup),
+    ("geo_adaptive_cells", q_geo_adaptive_cells, lambda _: sql_geo_adaptive_cells()),
+    ("dedup_keep_best", q_dedup_keep_best, lambda _: SQL_DEDUP_KEEP_BEST),
+    ("dedup_clusters", q_dedup_clusters, lambda _: SQL_DEDUP_CLUSTERS),
+    ("dataset_split", q_dataset_split, lambda _: SQL_DATASET_SPLIT),
+    # same rows as ann_ivf; the difference under test is the written
+    # layout's partition pruning, which the plan test asserts
+    ("ann_ivf_written", q_ann_ivf_written, sql_ann_ivf),
+    ("semdedup", q_semdedup, sql_semdedup),
+    ("ngram_jaccard", q_ngram_jaccard, lambda _: SQL_JACCARD),
+    ("gopher_repetition", q_gopher_repetition, lambda _: sql_gopher_repetition()),
+    ("simhash", q_simhash, sql_simhash),
+    ("simhash_pairs", q_simhash_pairs, sql_simhash_pairs),
+    ("minhash_lsh_pairs", q_minhash_lsh_pairs, sql_minhash_lsh_pairs),
+    ("geo_tile_encode", q_geo_tile_encode, lambda _: SQL_TILE),
+    ("geo_tile_pyramid", q_geo_tile_pyramid, lambda _: SQL_TILE_PYRAMID),
+    ("substring_dedup", q_substring_dedup, lambda _: SQL_SUBSTRING_DEDUP),
+    ("doc_chunks", q_doc_chunks, lambda _: SQL_DOC_CHUNKS),
+    ("phash_clusters", q_phash_clusters, lambda _: sql_phash_clusters()),
+    ("image_zone_rollup", q_image_zone_rollup, sql_image_zone_rollup),
+    ("ann_ivf_pq", q_ann_ivf_pq, sql_ann_ivf_pq),
+    (
+        "geo_tile_lut_incremental",
+        q_geo_tile_lut_incremental,
+        lambda _: sql_geo_tile_lut_incremental(),
+    ),
+    ("phash_neardup", q_phash_neardup, lambda _: sql_phash_neardup()),
+    ("audio_features", q_audio_features, sql_audio_features),
+    ("video_frames", q_video_frames, lambda _: sql_video_frames()),
+    ("ann_ivf", q_ann_ivf, sql_ann_ivf),
+    ("embedding_neardup", q_embedding_neardup, lambda _: SQL_EMB_NEARDUP),
+    ("geo_knn_fallback", q_geo_knn_fallback, sql_geo_knn_fallback),
+    ("intl_names", q_intl_names, lambda _: sql_intl_names()),
+    ("pricing_summary", q_pricing_summary, lambda _: SQL_PRICING),
+    ("stats_counts", q_stats_counts, lambda _: SQL_STATS),
+    ("merge_offsets", q_merge_offsets, lambda _: SQL_MERGE),
+    ("country_maxby", q_country_maxby, lambda _: SQL_MAXBY),
+    ("parent_minby", q_parent_minby, lambda _: SQL_MINBY),
+    ("topk_per_group", q_topk_per_group, lambda _: SQL_TOPK),
+    ("dense_ids", q_dense_ids, lambda _: SQL_DENSE),
+    ("hierarchy_label", q_hierarchy_label, lambda _: SQL_LABEL),
+    ("group_collect", q_group_collect, lambda _: SQL_COLLECT),
+    ("json_extract", q_json_extract, lambda _: SQL_JSON),
+    ("zip_format", q_zip_format, lambda _: SQL_ZIP),
+    ("geo_pip_assign", q_geo_pip_assign, lambda _: sql_geo_pip_assign()),
+    ("geo_zone_counts", q_geo_zone_counts, lambda _: sql_geo_zone_counts()),
+    ("geo_cell_encode", q_geo_cell_encode, lambda _: sql_geo_cell_encode()),
+    ("geo_multires_rollup", q_geo_multires_rollup, lambda _: sql_geo_multires_rollup()),
+    ("geo_parent_hierarchy", q_geo_parent_hierarchy, lambda _: sql_geo_parent_hierarchy()),
+    ("geo_zone_type", q_geo_zone_type, lambda _: sql_geo_zone_type()),
+    ("geo_full_labels", q_geo_full_labels, lambda _: sql_geo_full_labels()),
+    ("geo_osm_extract", q_geo_osm_extract, lambda _: sql_geo_osm_extract()),
+    ("geo_voronoi_cells", q_geo_voronoi_cells, lambda _: SQL_GEO_VORONOI),
+    ("geo_rasterize", q_geo_rasterize, lambda _: sql_geo_rasterize()),
+    ("geo_raster_assign", q_geo_raster_assign, lambda _: sql_geo_raster_assign()),
+    ("geo_raster_assign_exact", q_geo_raster_assign_exact, lambda _: sql_geo_pip_assign()),
+    ("geo_raster_tile_assign", q_geo_raster_tile_assign, lambda _: sql_geo_raster_tile_assign()),
+    (
+        "geo_raster_tile_assign_exact",
+        q_geo_raster_tile_assign_exact,
+        lambda _: sql_geo_pip_assign(),
+    ),
+    ("geo_lut_incremental", q_geo_lut_incremental, lambda _: sql_geo_lut_incremental()),
+    ("ann_pq", q_ann_pq, sql_ann_pq),
+    ("ann_pq_rerank", q_ann_pq_rerank, sql_ann_pq_rerank),
+    ("events_window", q_events_window, lambda _: SQL_EVENTS_WINDOW),
+    ("lang_id", q_lang_id, lambda _: sql_lang_id()),
+    ("ann_lsh", q_ann_lsh, lambda sf_dir: sql_ann_lsh(_emb_dim(sf_dir))),
+    ("ann_lsh_multi", q_ann_lsh_multi, lambda sf_dir: sql_ann_lsh_multi(_emb_dim(sf_dir))),
+    ("dedup_exact", q_dedup_exact, lambda _: SQL_DEDUP),
+    ("token_count", q_token_count, lambda _: SQL_TOKENS),
+    ("bpe_tokens", q_bpe_tokens, lambda _: SQL_BPE_TOKENS),
+    ("quality_score", q_quality_score, lambda _: sql_quality_score()),
+    ("doc_fingerprint", q_doc_fingerprint, lambda _: SQL_FINGERPRINT),
+    ("doc_rolling_hash", q_doc_rolling_hash, lambda _: SQL_ROLLING),
+    ("ann_brute_force", q_ann_brute_force, lambda sf_dir: sql_ann_brute_force(_query_vec(sf_dir))),
+    ("embedding_stats", q_embedding_stats, lambda _: SQL_EMB_STATS),
+    ("semi_anti_join", q_semi_anti_join, lambda _: SQL_SEMI_ANTI),
+    ("top_revenue", q_top_revenue, lambda _: SQL_TOP_REVENUE),
+    ("set_intersect_except", q_set_intersect_except, lambda _: SQL_INTERSECT),
+    ("rollup_counts", q_rollup_counts, lambda _: SQL_ROLLUP),
+    ("running_total", q_running_total, lambda _: SQL_RUNNING),
+)
+
+
 def queries() -> dict:
-    # ROTATION INVARIANT (standing policy since r5, institutionalized
-    # per VERDICT r5 #4): registry order is the DRIVER'S SAMPLE ORDER —
-    # the correctness gate caps its sample at DRIVER_SAMPLE_CAP (50)
-    # entries taken from the front of this dict. Any query whose
-    # implementation OR oracle changes in a round MUST be moved into
-    # the first 50 positions before the round's driver run, so every
-    # change is re-validated by the external gate (VERDICT r4 #2:
-    # simhash's width-16→64 change shipped two rounds before the driver
-    # re-sampled it). REGISTRY_TOTAL below is asserted against
-    # len(queries()) in test_oracle_parity.py so the window math cannot
-    # silently drift (ADVICE r5).
-    return {
-        # -- new or changed in r6: first in the window
-        #    geo_adaptive_cells: new (north_rule adaptive cell
-        #    splitting). dedup_keep_best: new (quality-argmax keeper).
-        #    ann_ivf_written: new. semdedup: Lloyd-refined centroids.
-        #    ngram_jaccard: size-estimate memoization + mtime-keyed
-        #    cache (changed in the r5 tail commit but NEVER sampled at
-        #    position 58 — the ADVICE r5 medium item). gopher: integer
-        #    char-mass outputs + conditional splittability guard.
-        #    simhash/minhash: conditional splittability guard.
-        #    tile encode/pyramid: polar-lat clamp in the SQL oracles.
-        #    geo_s2_encode / geo_s2_rollup: new (S2-style spherical
-        #    cells — cube face + quadratic ST + Hilbert).
-        #    Late-r6 additions, also in-window: stratified_sample,
-        #    term_stats_topk, geo_s2_range_scan, geo_s2_bbox_scan,
-        #    decontaminate, sessionize, event_quantiles,
-        #    geo_radius_join, phash_zone_neardup (colocated fixture).
-        #    image_zone_rollup stays in-window (its shared PIP-oracle
-        #    CTE text was touched when phash_zone_neardup forked it).
-        "geo_s2_encode": q_geo_s2_encode,
-        "geo_s2_rollup": q_geo_s2_rollup,
-        "stratified_sample": q_stratified_sample,
-        "term_stats_topk": q_term_stats_topk,
-        "geo_s2_range_scan": q_geo_s2_range_scan,
-        "geo_s2_bbox_scan": q_geo_s2_bbox_scan,
-        "decontaminate": q_decontaminate,
-        "sessionize": q_sessionize,
-        "event_quantiles": q_event_quantiles,
-        "geo_radius_join": q_geo_radius_join,
-        "phash_zone_neardup": q_phash_zone_neardup,
-        # -- r7 (optimization round) rotation: dedup_clusters /
-        #    dataset_split moved up — their lineage changed with the
-        #    strategy-dispatched jaccard pair generator (results
-        #    identical, but the policy re-validates every changed
-        #    implementation through the driver gate). The other r7
-        #    optimizations (ngram_jaccard, dedup_keep_best, minhash,
-        #    substring_dedup, gopher, decontaminate, term_stats_topk,
-        #    semdedup, geo_s2_bbox_scan face fix) were already inside
-        #    the window.
-        "geo_adaptive_cells": q_geo_adaptive_cells,
-        "dedup_keep_best": q_dedup_keep_best,
-        "dedup_clusters": q_dedup_clusters,
-        "dataset_split": q_dataset_split,
-        "ann_ivf_written": q_ann_ivf_written,
-        "semdedup": q_semdedup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "gopher_repetition": q_gopher_repetition,
-        "simhash": q_simhash,
-        "simhash_pairs": q_simhash_pairs,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "geo_tile_encode": q_geo_tile_encode,
-        "geo_tile_pyramid": q_geo_tile_pyramid,
-        # -- r5 additions (driver-sampled green in r5, kept high while
-        #    young)
-        "substring_dedup": q_substring_dedup,
-        "doc_chunks": q_doc_chunks,
-        "phash_clusters": q_phash_clusters,
-        "image_zone_rollup": q_image_zone_rollup,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "geo_tile_lut_incremental": q_geo_tile_lut_incremental,
-        "phash_neardup": q_phash_neardup,
-        "audio_features": q_audio_features,
-        "video_frames": q_video_frames,
-        "ann_ivf": q_ann_ivf,
-        "embedding_neardup": q_embedding_neardup,
-        "geo_knn_fallback": q_geo_knn_fallback,
-        "intl_names": q_intl_names,
-        "pricing_summary": q_pricing_summary,
-        "stats_counts": q_stats_counts,
-        "merge_offsets": q_merge_offsets,
-        "country_maxby": q_country_maxby,
-        "parent_minby": q_parent_minby,
-        "topk_per_group": q_topk_per_group,
-        "dense_ids": q_dense_ids,
-        "hierarchy_label": q_hierarchy_label,
-        "group_collect": q_group_collect,
-        "json_extract": q_json_extract,
-        "zip_format": q_zip_format,
-        "geo_pip_assign": q_geo_pip_assign,
-        "geo_zone_counts": q_geo_zone_counts,
-        "geo_cell_encode": q_geo_cell_encode,
-        "geo_multires_rollup": q_geo_multires_rollup,
-        "geo_parent_hierarchy": q_geo_parent_hierarchy,
-        "geo_zone_type": q_geo_zone_type,
-        "geo_full_labels": q_geo_full_labels,
-        "geo_osm_extract": q_geo_osm_extract,
-        "geo_voronoi_cells": q_geo_voronoi_cells,
-        "geo_rasterize": q_geo_rasterize,
-        "geo_raster_assign": q_geo_raster_assign,
-        "geo_raster_assign_exact": q_geo_raster_assign_exact,
-        "geo_raster_tile_assign": q_geo_raster_tile_assign,
-        "geo_raster_tile_assign_exact": q_geo_raster_tile_assign_exact,
-        "geo_lut_incremental": q_geo_lut_incremental,
-        "ann_pq": q_ann_pq,
-        "ann_pq_rerank": q_ann_pq_rerank,
-        "events_window": q_events_window,
-        "lang_id": q_lang_id,
-        "ann_lsh": q_ann_lsh,
-        "ann_lsh_multi": q_ann_lsh_multi,
-        "dedup_exact": q_dedup_exact,
-        "token_count": q_token_count,
-        "bpe_tokens": q_bpe_tokens,
-        "quality_score": q_quality_score,
-        "doc_fingerprint": q_doc_fingerprint,
-        "doc_rolling_hash": q_doc_rolling_hash,
-        "ann_brute_force": q_ann_brute_force,
-        "embedding_stats": q_embedding_stats,
-        # -- stable tail (full DuckDB oracles like everything above;
-        #    all 10 hash-green in CORRECTNESS_r04)
-        "semi_anti_join": q_semi_anti_join,
-        "top_revenue": q_top_revenue,
-        "set_intersect_except": q_set_intersect_except,
-        "rollup_counts": q_rollup_counts,
-        "running_total": q_running_total,
-    }
+    return {name: build for name, build, _ in REGISTRY}
+
+
+def _query_vec(sf_dir: str) -> list:
+    import duckdb
+
+    return (
+        duckdb.sql(f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' WHERE vec_id = 0")
+        .fetchone()[0]
+    )
 
 
 def _emb_dim(sf_dir: str) -> int:
@@ -5584,98 +5573,4 @@ def _emb_dim(sf_dir: str) -> int:
 
 
 def oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> dict:
-    import duckdb
-
-    qvec = (
-        duckdb.sql(f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' WHERE vec_id = 0")
-        .fetchone()[0]
-    )
-    return {
-        "pricing_summary": SQL_PRICING,
-        "stats_counts": SQL_STATS,
-        "merge_offsets": SQL_MERGE,
-        "country_maxby": SQL_MAXBY,
-        "parent_minby": SQL_MINBY,
-        "topk_per_group": SQL_TOPK,
-        "dense_ids": SQL_DENSE,
-        "hierarchy_label": SQL_LABEL,
-        "group_collect": SQL_COLLECT,
-        "json_extract": SQL_JSON,
-        "zip_format": SQL_ZIP,
-        "geo_pip_assign": sql_geo_pip_assign(),
-        "geo_zone_counts": sql_geo_zone_counts(),
-        "geo_cell_encode": sql_geo_cell_encode(),
-        "geo_s2_encode": sql_geo_s2_encode(),
-        "geo_s2_rollup": sql_geo_s2_rollup(),
-        "geo_multires_rollup": sql_geo_multires_rollup(),
-        "geo_parent_hierarchy": sql_geo_parent_hierarchy(),
-        "geo_tile_encode": SQL_TILE,
-        "geo_zone_type": sql_geo_zone_type(),
-        "geo_full_labels": sql_geo_full_labels(),
-        "geo_osm_extract": sql_geo_osm_extract(),
-        "geo_voronoi_cells": SQL_GEO_VORONOI,
-        "geo_rasterize": sql_geo_rasterize(),
-        "geo_raster_assign": sql_geo_raster_assign(),
-        "geo_raster_assign_exact": _pip_oracle_core()
-        + "SELECT pid, zone_id FROM assigned ORDER BY pid",
-        "geo_raster_tile_assign": sql_geo_raster_tile_assign(),
-        "geo_raster_tile_assign_exact": _pip_oracle_core()
-        + "SELECT pid, zone_id FROM assigned ORDER BY pid",
-        "geo_lut_incremental": sql_geo_lut_incremental(),
-        "geo_tile_lut_incremental": sql_geo_tile_lut_incremental(),
-        "geo_tile_pyramid": SQL_TILE_PYRAMID,
-        "ann_pq": sql_ann_pq(sf_dir),
-        "ann_ivf_pq": sql_ann_ivf_pq(sf_dir),
-        # the written-layout variant returns exactly q_ann_ivf's rows —
-        # the difference under test is the PHYSICAL plan (partition
-        # pruning), which the plan test asserts
-        "ann_ivf_written": sql_ann_ivf(sf_dir),
-        "geo_adaptive_cells": sql_geo_adaptive_cells(),
-        "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-        "stratified_sample": sql_stratified_sample(sf_dir),
-        "term_stats_topk": SQL_TERM_STATS,
-        "geo_s2_range_scan": sql_geo_s2_range_scan(),
-        "geo_s2_bbox_scan": sql_geo_s2_bbox_scan(),
-        "decontaminate": SQL_DECONTAMINATE,
-        "sessionize": SQL_SESSIONIZE,
-        "event_quantiles": SQL_EVENT_QUANTILES,
-        "geo_radius_join": sql_geo_radius_join(),
-        "phash_zone_neardup": sql_phash_zone_neardup(sf_dir),
-        "ann_pq_rerank": sql_ann_pq_rerank(sf_dir),
-        "events_window": SQL_EVENTS_WINDOW,
-        "lang_id": sql_lang_id(),
-        "ann_lsh": sql_ann_lsh(_emb_dim(sf_dir)),
-        "ann_lsh_multi": sql_ann_lsh_multi(_emb_dim(sf_dir)),
-        "semi_anti_join": SQL_SEMI_ANTI,
-        "top_revenue": SQL_TOP_REVENUE,
-        "set_intersect_except": SQL_INTERSECT,
-        "rollup_counts": SQL_ROLLUP,
-        "running_total": SQL_RUNNING,
-        "geo_knn_fallback": sql_geo_knn_fallback(sf_dir),
-        "intl_names": sql_intl_names(),
-        "embedding_neardup": SQL_EMB_NEARDUP,
-        "dedup_exact": SQL_DEDUP,
-        "substring_dedup": SQL_SUBSTRING_DEDUP,
-        "doc_chunks": SQL_DOC_CHUNKS,
-        "token_count": SQL_TOKENS,
-        "bpe_tokens": SQL_BPE_TOKENS,
-        "quality_score": sql_quality_score(),
-        "ngram_jaccard": SQL_JACCARD,
-        "dedup_clusters": SQL_DEDUP_CLUSTERS,
-        "dataset_split": SQL_DATASET_SPLIT,
-        "doc_fingerprint": SQL_FINGERPRINT,
-        "doc_rolling_hash": SQL_ROLLING,
-        "ann_brute_force": sql_ann_brute_force(qvec),
-        "embedding_stats": SQL_EMB_STATS,
-        "minhash_lsh_pairs": sql_minhash_lsh_pairs(sf_dir),
-        "simhash": sql_simhash(sf_dir),
-        "simhash_pairs": sql_simhash_pairs(sf_dir),
-        "phash_neardup": sql_phash_neardup(),
-        "phash_clusters": sql_phash_clusters(),
-        "image_zone_rollup": sql_image_zone_rollup(sf_dir),
-        "gopher_repetition": sql_gopher_repetition(),
-        "semdedup": sql_semdedup(sf_dir),
-        "audio_features": sql_audio_features(sf_dir),
-        "video_frames": sql_video_frames(),
-        "ann_ivf": sql_ann_ivf(sf_dir),
-    }
+    return {name: oracle(sf_dir) for name, _, oracle in REGISTRY}

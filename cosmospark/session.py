@@ -60,16 +60,21 @@ def get_spark(
     return b.getOrCreate()
 
 
-def local_table(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """Driver-side row tuples (in ``schema`` order) as a JVM-local
-    relation: the plan is a ``LocalTableScan``, so no scan of it starts a
-    Python worker (a list-built ``createDataFrame`` re-runs a Python
-    ``map`` per partition on every scan). Built from Arrow because an
-    empty pandas frame falls back to the Python RDD path."""
+def local_table(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """Python-side rows as a JVM-local relation: the plan is a
+    ``LocalTableScan``, so no scan of it starts a Python worker (a
+    list-built ``createDataFrame`` re-runs a Python ``map`` per partition
+    on every scan). Each row is a tuple in ``schema`` order or a dict
+    keyed by field name (a missing key reads NULL); ``schema`` is a
+    ``StructType`` or a DDL string. Built from Arrow because an empty
+    pandas frame falls back to the Python RDD path."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
+    rows = [tuple(map(r.get, schema.names)) if isinstance(r, dict) else r for r in rows]
     cols = list(zip(*rows)) or [()] * len(schema)
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],

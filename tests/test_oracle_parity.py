@@ -84,11 +84,37 @@ def test_parity_sf001(spark, con_slow, name):
     _check_parity(spark, con_slow, name, SF_DIR_SLOW)
 
 
+# today's registry, in the external correctness gate's sample order
+REGISTRY_NAMES = [
+    "geo_s2_encode", "geo_s2_rollup", "stratified_sample", "term_stats_topk",
+    "geo_s2_range_scan", "geo_s2_bbox_scan", "decontaminate", "sessionize",
+    "event_quantiles", "geo_radius_join", "phash_zone_neardup", "geo_adaptive_cells",
+    "dedup_keep_best", "dedup_clusters", "dataset_split", "ann_ivf_written",
+    "semdedup", "ngram_jaccard", "gopher_repetition", "simhash", "simhash_pairs",
+    "minhash_lsh_pairs", "geo_tile_encode", "geo_tile_pyramid", "substring_dedup",
+    "doc_chunks", "phash_clusters", "image_zone_rollup", "ann_ivf_pq",
+    "geo_tile_lut_incremental", "phash_neardup", "audio_features", "video_frames",
+    "ann_ivf", "embedding_neardup", "geo_knn_fallback", "intl_names",
+    "pricing_summary", "stats_counts", "merge_offsets", "country_maxby",
+    "parent_minby", "topk_per_group", "dense_ids", "hierarchy_label", "group_collect",
+    "json_extract", "zip_format", "geo_pip_assign", "geo_zone_counts",
+    "geo_cell_encode", "geo_multires_rollup", "geo_parent_hierarchy", "geo_zone_type",
+    "geo_full_labels", "geo_osm_extract", "geo_voronoi_cells", "geo_rasterize",
+    "geo_raster_assign", "geo_raster_assign_exact", "geo_raster_tile_assign",
+    "geo_raster_tile_assign_exact", "geo_lut_incremental", "ann_pq", "ann_pq_rerank",
+    "events_window", "lang_id", "ann_lsh", "ann_lsh_multi", "dedup_exact",
+    "token_count", "bpe_tokens", "quality_score", "doc_fingerprint",
+    "doc_rolling_hash", "ann_brute_force", "embedding_stats", "semi_anti_join",
+    "top_revenue", "set_intersect_except", "rollup_counts", "running_total",
+]
+
+
 def test_all_queries_have_entries():
+    """The names keep the correctness gate's sample order, and every
+    query has exactly one oracle."""
     qs = Q.queries()
-    assert len(qs) >= 20
-    # every oracle key must exist in queries
-    assert set(ORACLES) <= set(qs)
+    assert list(qs) == REGISTRY_NAMES
+    assert set(ORACLES) == set(qs)
 
 
 def test_registry_window_math():
@@ -118,6 +144,37 @@ def test_registry_window_math():
         "geo_s2_bbox_scan",
     ]:
         assert name in window, f"r7-changed query {name} fell outside the sample window"
+
+
+# one query per registry fixture site: the lux typed zones, four-squares,
+# the typer zones + inclusions, lux_world, the five OSM tables, the voronoi
+# zones + places, the four phash fixtures, and the audio and video inputs
+_FIXTURE_QUERIES = [
+    "geo_pip_assign", "geo_parent_hierarchy", "geo_zone_type", "geo_full_labels",
+    "geo_osm_extract", "geo_voronoi_cells", "phash_neardup", "phash_clusters",
+    "image_zone_rollup", "phash_zone_neardup", "audio_features", "video_frames",
+]
+
+
+@pytest.mark.parametrize("name", _FIXTURE_QUERIES)
+def test_fixture_tables_are_local_relations(spark, monkeypatch, name):
+    """Every fixture table is built from Arrow (a LocalTableScan), never
+    from a Python list or a pandas frame, whose scans start a Python
+    worker per partition."""
+    import pyarrow as pa
+    from pyspark.sql import SparkSession
+
+    create = SparkSession.createDataFrame
+    seen = []
+
+    def spy(self, data, *args, **kwargs):
+        if not isinstance(data, pa.Table):
+            seen.append(type(data).__name__)
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    Q.queries()[name](spark, SF_DIR)
+    assert seen == [], f"{name} built a fixture table from {seen}"
 
 
 def test_semdedup_cluster_skew(spark):

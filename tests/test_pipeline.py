@@ -380,3 +380,14 @@ def test_generate_cli_bare_args_default_subcommand(spark, tmp_path, capsys):
     stats = _json.loads(capsys.readouterr().err.strip().splitlines()[-1])
     assert stats["zone_count"] == 198
     assert read_zones(spark, out).count() == 198
+
+
+def test_build_zones_pins_no_cached_relation(spark):
+    """run_stage_fp materialises every build stage (localCheckpoint or a
+    parquet read-back), so the build leaves no cached copy pinned in the
+    session."""
+    spark.catalog.clearCache()
+    raw = spark.createDataFrame(lux_world(), schema=ZONES_RAW_SCHEMA)
+    out = build_zones(spark, raw, make_rules(spark, LUX_RULES_LEVELS))
+    assert out.count() == 198
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
