@@ -7,10 +7,11 @@ src/zone_ext.rs:279-284) redesigned for 10^12 rows:
 * the zone dimension (small by design — the reference holds the whole
   planet's zones in one process) is compiled into ONE per-zone index on
   executors (``_zone_index_rows``: each zone's cell cover with FULL
-  flags, rank, area, kNN centre and packed rings). The broadcast path
-  fetches those rows over Arrow, assembles a per-cell candidate index
-  (``ZoneIndex``) on the driver and broadcasts it once; the partitioned
-  path joins on the same rows;
+  flags, rank, area, kNN centre and packed rings), prepared once per
+  zone table (``ZoneDim``). The broadcast path fetches those rows over
+  Arrow, assembles a per-cell candidate index (``ZoneIndex``) on the
+  driver and broadcasts it once; the partitioned path joins on the same
+  rows;
 * the broadcast fact side runs ONE narrow ``mapInPandas`` pass — scan →
   Arrow batch → vectorized numpy kernel → sink. No shuffle at all, so
   megacity-cell skew cannot produce a hot reducer on this path, and
@@ -29,11 +30,14 @@ tie-broken by (area, zone_id) — deterministic under any partitioning.
 
 from __future__ import annotations
 
+import threading
+import weakref
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from cosmospark import cells, geom
@@ -152,13 +156,23 @@ def _centres(rows: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return ids[order], lon[order], lat[order]
 
 
+# (points × centres) distances the kNN fallback holds at once: 8 MB
+# per float64 temporary, whatever the batch size or zone count
+_KNN_CHUNK_CELLS = 1 << 20
+
+
 def _nearest_centre(lon: np.ndarray, lat: np.ndarray, centres) -> np.ndarray:
     """Zone id of each point's nearest centre; ties go to the smallest
-    zone id. Brute force: the zone dim is broadcast-scale (the scale
-    path would pre-bucket the centres by coarse cell)."""
+    zone id (``centres`` are sorted by id and argmin takes the first).
+    Brute force over row chunks of at most ``_KNN_CHUNK_CELLS`` distances
+    (the scale path would pre-bucket the centres by coarse cell)."""
     ids, cx, cy = centres
-    d2 = (lon[:, None] - cx[None, :]) ** 2 + (lat[:, None] - cy[None, :]) ** 2
-    return ids[np.argmin(d2, axis=1)]
+    step = max(1, _KNN_CHUNK_CELLS // max(len(ids), 1))
+    out = np.empty(len(lon), dtype=ids.dtype)
+    for i in range(0, len(lon), step):
+        x, y = lon[i : i + step, None], lat[i : i + step, None]
+        out[i : i + step] = ids[np.argmin((x - cx) ** 2 + (y - cy) ** 2, axis=1)]
+    return out
 
 
 def _covers_by_zone(lon: np.ndarray, lat: np.ndarray, zs: np.ndarray, rings: dict) -> np.ndarray:
@@ -275,11 +289,134 @@ class ZoneIndex:
 
 
 def build_zone_index(zones: DataFrame, max_cells: int | None = None) -> ZoneIndex:
-    """The broadcast path's index: the zone rows are built on executors
-    and fetched over Arrow; the driver only assembles them."""
+    """The broadcast path's index, built afresh on every call (the
+    assign paths reuse one through ``zone_dim``): the zone rows are built
+    on executors and fetched over Arrow; the driver only assembles
+    them."""
     if max_cells is None:
         max_cells = auto_max_cells(zones.count())
-    return ZoneIndex(_zone_index_rows(zones, max_cells).toArrow())
+    return ZoneDim(zones, max_cells).index()
+
+
+class ZoneDim:
+    """The prepared zone dimension: one zone table's index rows at one
+    ``max_cells``, and everything the exact assign paths derive from
+    them, each built on first use and then kept:
+
+    * ``rows()`` — the checkpointed ``_zone_index_rows`` (partitioned);
+    * ``key_stats()`` — their resolution list and (res, cell) key count;
+    * ``index()`` — the assembled ``ZoneIndex`` (broadcast);
+    * ``broadcast(sc)`` / ``centres(sc)`` — broadcast handles of the
+      index and of the kNN centres.
+
+    It holds the rows' unevaluated plan, not the zone DataFrame, so a
+    memo entry keyed weakly by that DataFrame (``zone_dim``) dies with
+    it. Each part is built once even when several threads share the
+    dimension."""
+
+    def __init__(self, zones: DataFrame | None, max_cells: int, index: ZoneIndex | None = None):
+        self._plan = None if zones is None else _zone_index_rows(zones, max_cells)
+        self._rows: DataFrame | None = None
+        self._keys: tuple[list[int], int] | None = None
+        self._index = index
+        self._bc = self._centres_bc = None
+        self._lock = threading.RLock()
+
+    @classmethod
+    def of_index(cls, index: ZoneIndex) -> "ZoneDim":
+        """A dimension around a prebuilt ``ZoneIndex`` (no zone rows)."""
+        return cls(None, 0, index)
+
+    def rows(self) -> DataFrame:
+        # localCheckpoint, not .cache(): the blocks free via the
+        # ContextCleaner once this dimension is dropped, instead of
+        # accumulating catalog entries (ADVICE r3 lifecycle rule)
+        with self._lock:
+            if self._rows is None:
+                self._rows = self._plan.localCheckpoint(eager=True)
+            return self._rows
+
+    def key_stats(self) -> tuple[list[int], int]:
+        """(sorted resolutions, total cells) over the rows' (res, cell)
+        keys: one tiny agg, which sizes the partitioned path's key-only
+        broadcasts."""
+        with self._lock:
+            if self._keys is None:
+                stats = (
+                    self.rows().filter(F.size("cells") > 0)
+                    .groupBy("res").agg(F.sum(F.size("cells")).alias("n")).collect()
+                )
+                self._keys = (sorted(r["res"] for r in stats), sum(r["n"] for r in stats))
+            return self._keys
+
+    def index(self) -> ZoneIndex:
+        with self._lock:
+            if self._index is None:
+                rows = self._plan if self._rows is None else self._rows
+                self._index = ZoneIndex(rows.toArrow())
+            return self._index
+
+    def broadcast(self, sc):
+        with self._lock:
+            if self._bc is None:
+                self._bc = sc.broadcast(self.index())
+            return self._bc
+
+    def centres(self, sc):
+        """Broadcast (zone_id, lon, lat) kNN centres, or None if no zone
+        has one; centres are tiny at any scale."""
+        with self._lock:
+            if self._centres_bc is None:
+                c = _centres(self.rows().select("zone_id", "center").toArrow())
+                self._centres_bc = sc.broadcast(c) if len(c[0]) else False
+            return self._centres_bc or None
+
+
+# zone table → (its lock, {max_cells: ZoneDim}); an entry dies with
+# its DataFrame. _DIMS_LOCK guards only this dict: a table's count and
+# ZoneDim are made under that table's own lock, so no caller waits on
+# a Spark job over another table
+_DIMS: "weakref.WeakKeyDictionary[DataFrame, tuple]" = weakref.WeakKeyDictionary()
+_DIMS_LOCK = threading.Lock()
+
+# leaves with no outside source: REFRESH TABLE and refreshByPath re-read
+# a file or catalog relation, even into an existing cache, and never
+# one of these
+_FIXED_LEAVES = frozenset({"LocalRelation", "LogicalRDD", "Range", "OneRowRelation"})
+
+
+def _immutable(df: DataFrame) -> bool:
+    """True when ``df``'s rows cannot change under the same DataFrame
+    object: a deterministic plan whose leaves are all local relations,
+    or, while it is cached (checked on every call, so an unpersisted
+    table is no longer reused), all without an outside source. A file-
+    or catalog-backed table can change under one DataFrame, cached or
+    not."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    fixed = _FIXED_LEAVES if df.storageLevel != StorageLevel.NONE else {"LocalRelation"}
+    return plan.deterministic() and kinds <= fixed
+
+
+def zone_dim(zones: DataFrame, max_cells: int | None = None) -> ZoneDim:
+    """The prepared dimension of ``zones`` at ``max_cells`` (None: the
+    broadcast path's ``auto_max_cells`` of the zone count). Reused across
+    calls on the same DataFrame object while it is ``_immutable``;
+    otherwise built afresh, as a file-backed table must be. A caller
+    gets reuse by passing one zone DataFrame object to every call (the
+    query registry's ``queries._lux_typed_zones`` is one per session)."""
+    if not _immutable(zones):
+        with _DIMS_LOCK:
+            _DIMS.pop(zones, None)
+        return ZoneDim(zones, auto_max_cells(zones.count()) if max_cells is None else max_cells)
+    with _DIMS_LOCK:
+        lock, memo = _DIMS.setdefault(zones, (threading.Lock(), {}))
+    with lock:
+        if max_cells not in memo:
+            n = auto_max_cells(zones.count()) if max_cells is None else max_cells
+            memo[max_cells] = memo[n] = memo.get(n) or ZoneDim(zones, n)
+        return memo[max_cells]
 
 
 # ---------------------------------------------------------------------------
@@ -387,6 +524,11 @@ def estimate_zone_geom_bytes(zones: DataFrame) -> int:
     return int(row["geom"] or 0) + 200 * int(row["n"])
 
 
+def _check_strategy(strategy: str) -> None:
+    if strategy not in ("broadcast", "partitioned", "auto"):
+        raise ValueError(f"strategy must be one of broadcast, partitioned, auto; got {strategy!r}")
+
+
 def assign_zones(
     points: DataFrame,
     zones: DataFrame,
@@ -415,8 +557,11 @@ def assign_zones(
       * ``auto`` — measure the geometry size JVM-side and pick one of
         the two.
 
-    The pixel-approximate raster join is ``raster.assign_zones_raster``.
+    Both paths take the zone index from ``zone_dim``, so repeat calls on
+    one cached or local zone table build it once. The pixel-approximate
+    raster join is ``raster.assign_zones_raster``.
     """
+    _check_strategy(strategy)
     if strategy == "auto":
         est = estimate_zone_geom_bytes(zones)
         strategy = (
@@ -432,10 +577,7 @@ def assign_zones(
             knn_fallback=knn_fallback, index_max_cells=index_max_cells, id_col=id_col,
         )
 
-    spark = points.sparkSession
-    index = build_zone_index(zones, index_max_cells)
-    bc = spark.sparkContext.broadcast(index)
-
+    bc = zone_dim(zones, index_max_cells).broadcast(points.sparkSession.sparkContext)
     out_schema = T.StructType(points.schema.fields + [T.StructField("zone_id", T.LongType())])
 
     def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -479,16 +621,13 @@ def assign_zones_partitioned(
     replicated ``n_split`` times. A zone's geometry crosses the shuffle
     once per split, never once per boundary cell, and zones with no
     boundary candidates are not shipped at all."""
-    spark = points.sparkSession
     if index_max_cells is None:
         # the per-cell keys are joined against every point here, not
         # broadcast in one index — the fixed conservative default applies
         # rather than the broadcast path's auto budget
         index_max_cells = INDEX_MAX_CELLS
-    # localCheckpoint, not .cache(): blocks free with the plan via the
-    # ContextCleaner instead of accumulating catalog entries across
-    # composed query invocations (ADVICE r3 lifecycle rule)
-    zrows = _zone_index_rows(zones, index_max_cells).localCheckpoint(eager=True)
+    dim = zone_dim(zones, index_max_cells)
+    zrows = dim.rows()
     # the key rows take a fresh zone_id attribute: zrows feeds both
     # sides of the refine cogroup, which must not share expression ids
     zkeys = zrows.select(
@@ -498,12 +637,10 @@ def assign_zones_partitioned(
         "res", F.col("e.cells").alias("cell"),
         "zone_id", "rank", "area", F.col("e.full").alias("full"),
     )
-    # one tiny agg gives the resolution list AND the cell count that
-    # sizes the key-only broadcasts below (geometry is NEVER broadcast
-    # on this path; (res, cell) key rows are a different budget)
-    res_stats = zkeys.groupBy("res").count().collect()
-    res_list = sorted(r["res"] for r in res_stats)
-    n_zcells = sum(r["count"] for r in res_stats)
+    # the cell count sizes the key-only broadcasts below (geometry is
+    # NEVER broadcast on this path; (res, cell) key rows are a different
+    # budget)
+    res_list, n_zcells = dim.key_stats()
     keys_small = n_zcells * 32 <= BROADCAST_BUDGET_BYTES
     if not res_list:
         out = points.withColumn("zone_id", F.lit(-1).cast("long"))
@@ -608,26 +745,23 @@ def assign_zones_partitioned(
         winners.withColumnRenamed("pid", id_col), id_col, "left"
     ).withColumn("zone_id", F.coalesce(F.col("zone_id"), F.lit(-1)).cast("long"))
 
-    if knn_fallback:
-        # centres are tiny at any scale → always broadcastable
-        centres = _centres(zrows.select("zone_id", "center").toArrow())
-        if len(centres[0]):
-            bc = spark.sparkContext.broadcast(centres)
+    bc = dim.centres(points.sparkSession.sparkContext) if knn_fallback else None
+    if bc is not None:
 
-            def _knn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    zid = pdf["zone_id"].to_numpy().copy()
-                    miss = np.flatnonzero(zid == -1)
-                    if len(miss):
-                        zid[miss] = _nearest_centre(
-                            pdf[lon_col].to_numpy(dtype=np.float64)[miss],
-                            pdf[lat_col].to_numpy(dtype=np.float64)[miss],
-                            bc.value,
-                        )
-                        pdf["zone_id"] = zid
-                    yield pdf
+        def _knn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                zid = pdf["zone_id"].to_numpy().copy()
+                miss = np.flatnonzero(zid == -1)
+                if len(miss):
+                    zid[miss] = _nearest_centre(
+                        pdf[lon_col].to_numpy(dtype=np.float64)[miss],
+                        pdf[lat_col].to_numpy(dtype=np.float64)[miss],
+                        bc.value,
+                    )
+                    pdf["zone_id"] = zid
+                yield pdf
 
-            out = out.mapInPandas(_knn, out.schema)
+        out = out.mapInPandas(_knn, out.schema)
     return out
 
 
@@ -660,10 +794,11 @@ def encode_and_assign(
     Chaining encode_points → assign_zones costs two Arrow round trips;
     at 10^12 rows the python-exchange is the dominant cost on this
     all-narrow path, so the fused variant halves it. Semantics identical
-    to encode_points(...) then assign_zones(...)."""
-    spark = points.sparkSession
-    index = build_zone_index(zones, index_max_cells)
-    bc = spark.sparkContext.broadcast(index)
+    to encode_points(...) then assign_zones(...). The broadcast index
+    comes from ``zone_dim``: the first call on a cached or local zone
+    table builds and broadcasts it, and a later call on the same
+    DataFrame object runs no zone-side job at all."""
+    bc = zone_dim(zones, index_max_cells).broadcast(points.sparkSession.sparkContext)
     res_sorted = sorted(resolutions)
     finest = res_sorted[-1]
 
@@ -705,6 +840,7 @@ def assign_images(
     encode_points + the partitioned cell-cogroup assignment (two narrow
     passes + one shuffle instead of shipping multi-GB geometry to every
     executor)."""
+    _check_strategy(strategy)
     if strategy == "auto":
         strategy = (
             "broadcast"

@@ -23,7 +23,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from cosmospark import cells, codecs
-from cosmospark.assign import DEFAULT_RESOLUTIONS, DEFAULT_TILE_Z, build_zone_index
+from cosmospark.assign import DEFAULT_RESOLUTIONS, DEFAULT_TILE_Z, ZoneDim, zone_dim
 
 # lux world box (fixtures.py)
 _X0, _Y0, _W, _H = 2.0, 44.0, 13.0, 10.0
@@ -165,15 +165,12 @@ def image_pipeline(images: DataFrame, zones: DataFrame, px: int = 16, index=None
     One mapInPandas pass, zero shuffles: the scalable shape for 10^12
     rows (scan → narrow transform → partitioned sink).
 
-    ``index``, a prebuilt ``assign.build_zone_index(zones)``, skips the
-    dim-side index build (~0.6 s for 200 detailed zones); a caller that
-    runs the pipeline repeatedly over one zone table builds it once
-    (``perfbench``'s image workload builds it in its setup, outside the
-    timed job)."""
-    spark = images.sparkSession
-    if index is None:
-        index = build_zone_index(zones)
-    bc = spark.sparkContext.broadcast(index)
+    The zone index comes from ``assign.zone_dim``: built and broadcast
+    by the first call on a cached or local zone table, reused by later
+    ones. ``index``, a prebuilt ``assign.build_zone_index(zones)``, is
+    used as given instead (broadcast afresh on each call)."""
+    dim = zone_dim(zones) if index is None else ZoneDim.of_index(index)
+    bc = dim.broadcast(images.sparkSession.sparkContext)
     res_sorted = sorted(DEFAULT_RESOLUTIONS)
     finest = res_sorted[-1]
 

@@ -62,8 +62,21 @@ def _lux_typed_rows() -> tuple:
     return tuple((r["id"], r) for r in rows)
 
 
+# (session, its lux zone table) of the latest _lux_typed_zones call
+_LUX_ZONES: tuple = (None, None)
+
+
 def _lux_typed_zones(spark: SparkSession) -> DataFrame:
-    return local_table(spark, [r for _, r in _lux_typed_rows()], ZONES_RAW_SCHEMA)
+    """The typed lux zones as one local table per session: every query
+    assigns against the same DataFrame object, so the session's first
+    exact assign builds the zone index (``assign.zone_dim``) and every
+    later one reuses it."""
+    global _LUX_ZONES
+    held, zones = _LUX_ZONES
+    if held is not spark:
+        zones = local_table(spark, [r for _, r in _lux_typed_rows()], ZONES_RAW_SCHEMA)
+        _LUX_ZONES = (spark, zones)
+    return zones
 
 
 def _zones_values_sql() -> str:
@@ -3785,19 +3798,36 @@ def _minhash_signatures(sf_dir: str):
 _ORACLE_SIDE_DIR = "/tmp/cosmospark_oracle"
 
 
+def _sf_tag(sf_dir: str) -> str:
+    """File-name tag of a data directory: its basename plus a short hash
+    of its absolute path, so two directories with one basename never
+    share a side file."""
+    import hashlib
+
+    path = os.path.abspath(os.path.normpath(str(sf_dir)))
+    return f"{os.path.basename(path)}-{hashlib.sha1(path.encode()).hexdigest()[:10]}"
+
+
 def _materialize_oracle_parquet(name: str, sf_dir: str, columns: dict) -> str:
     """Write a small oracle-side table to parquet (DuckDB reads it by
     absolute path inside the oracle SQL). Deterministic content → safe
-    to overwrite on every oracle_sql() call."""
-    import os
+    to overwrite on every oracle_sql() call; written to a temp name and
+    renamed into place, so a concurrent reader never sees half a file."""
+    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(_ORACLE_SIDE_DIR, exist_ok=True)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_ORACLE_SIDE_DIR, f"{name}_{tag}.parquet")
-    pq.write_table(pa.table(columns), path)
+    path = os.path.join(_ORACLE_SIDE_DIR, f"{name}_{_sf_tag(sf_dir)}.parquet")
+    fd, tmp = tempfile.mkstemp(dir=_ORACLE_SIDE_DIR, suffix=".tmp")
+    os.close(fd)
+    try:
+        pq.write_table(pa.table(columns), tmp)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return path
 
 
@@ -4334,9 +4364,8 @@ def _ivf_written_layout(spark, sf_dir: str) -> str:
     convention as _SIZE_EST_CACHE)."""
     from cosmospark import ann
 
-    tag = os.path.basename(os.path.normpath(str(sf_dir)))
     src_mt = _path_mtime(f"{sf_dir}/embeddings.parquet")
-    path = os.path.join(_IVF_STORE_DIR, tag)
+    path = os.path.join(_IVF_STORE_DIR, _sf_tag(sf_dir))
     stamp = os.path.join(path, "_SRC_MTIME")
     try:
         fresh = open(stamp).read() == repr(src_mt)

@@ -566,7 +566,9 @@ def assign_zones_raster(
     and only points in boundary pixels (sentinel -2 — a
     perimeter-scale fraction at fine ``res``) run the exact PIP kernel
     via the fallback strategy, honoring the caller's strategy/budget
-    (ADVICE r3)."""
+    (ADVICE r3). That refine goes through ``assign_zones``, so its zone
+    index is built once per cached or local zone table
+    (``assign.zone_dim``), not once per call."""
     declared: bool | None = exact
     if zones is None and (lut is None or exact):
         raise ValueError(

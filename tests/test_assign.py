@@ -16,6 +16,7 @@ from cosmospark.assign import (
 )
 from cosmospark.fixtures import LUX_RULES_LEVELS, gen_images, lux_world
 from cosmospark.pipeline import build_zones
+from cosmospark.session import local_table
 from cosmospark.typer import make_rules
 from cosmospark.ztypes import IMAGES_SCHEMA, TYPE_RANK, ZONES_RAW_SCHEMA
 
@@ -510,3 +511,216 @@ def test_partitioned_hostile_points_match_broadcast(spark, monkeypatch):
         assert [r["zone_id"] for r in part.orderBy("pid").collect()] == want[False]
     finally:
         spark.conf.set(threshold, saved)
+
+
+@pytest.mark.parametrize("strategy", ["raster", "bogus"])
+def test_unknown_strategy_rejected(spark, strategy):
+    pts = spark.createDataFrame([(0, 6.1, 49.6)], "pid long, lon double, lat double")
+    zones = spark.createDataFrame([], schema=ZONES_RAW_SCHEMA)
+    for fn in (assign_zones, assign_images):
+        with pytest.raises(ValueError, match="broadcast, partitioned, auto"):
+            fn(pts, zones, strategy=strategy)
+
+
+def test_nearest_centre_chunks_keep_ties(monkeypatch):
+    """The kNN fallback evaluates in row chunks; the result, ties to the
+    smallest zone id included, equals one unchunked evaluation."""
+    import cosmospark.assign as A
+
+    rng = np.random.default_rng(5)
+    # integer centres, several shared by two or three zones, and points
+    # on integer and half-integer coordinates: many exact equidistant ties
+    ids = np.arange(10, 210, dtype=np.int64)
+    cx = rng.integers(0, 12, len(ids)).astype(float)
+    cy = rng.integers(0, 12, len(ids)).astype(float)
+    cx[1::7], cy[1::7] = cx[::7][: len(cx[1::7])], cy[::7][: len(cy[1::7])]
+    centres = (ids, cx, cy)
+    n = 3 * (A._KNN_CHUNK_CELLS // len(ids)) + 17
+    lon = rng.integers(0, 24, n) / 2.0
+    lat = rng.integers(0, 24, n) / 2.0
+    chunked = A._nearest_centre(lon, lat, centres)
+    d2 = (lon[:, None] - cx) ** 2 + (lat[:, None] - cy) ** 2
+    ties = (d2 == d2.min(axis=1, keepdims=True)).sum(axis=1)
+    assert (ties > 1).sum() > 1000
+    want = np.where(d2 == d2.min(axis=1, keepdims=True), ids, np.iinfo(np.int64).max).min(axis=1)
+    assert (chunked == want).all()
+    monkeypatch.setattr(A, "_KNN_CHUNK_CELLS", 1 << 40)
+    assert (A._nearest_centre(lon, lat, centres) == chunked).all()
+
+
+# ---------------------------------------------------------------------------
+# Prepared zone dimension: one index per zone table, not per call
+
+
+def _squares(n=6):
+    """n disjoint 1° city squares along the equator."""
+    return [
+        {"id": z, "osm_id": f"r{z}", "zone_type": "city", "rings": geom.rings_to_rows(
+            [(0, 0, np.array([2.0 * z, 2.0 * z, 2.0 * z + 1, 2.0 * z + 1]), np.array([0.0, 1, 1, 0]))]
+        )}
+        for z in range(n)
+    ]
+
+
+def _jobs_during(spark, fn):
+    """→ (fn(), number of Spark jobs fn ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zone-dim-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "zone dim test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def index_builds(monkeypatch):
+    """Counts zone-index row builds (one per ZoneDim built)."""
+    import cosmospark.assign as A
+
+    built = []
+    real = A._zone_index_rows
+
+    def _spy(zones, max_cells):
+        built.append(max_cells)
+        return real(zones, max_cells)
+
+    monkeypatch.setattr(A, "_zone_index_rows", _spy)
+    return built
+
+
+class TestZoneDim:
+    def test_repeat_fused_call_runs_no_zone_job(self, spark, index_builds):
+        from cosmospark.assign import encode_and_assign
+
+        zones = spark.createDataFrame(_squares(), schema=ZONES_RAW_SCHEMA).cache()
+        pts = spark.createDataFrame([(0, 0.5, 0.5), (1, 4.5, 0.5)], "pid long, lon double, lat double")
+        first, n_first = _jobs_during(spark, lambda: encode_and_assign(pts, zones))
+        again, n_again = _jobs_during(spark, lambda: encode_and_assign(pts, zones))
+        assert n_first >= 2  # the zone count and the cover job
+        assert n_again == 0
+        assert len(index_builds) == 1
+        assert [r["zone_id"] for r in again.orderBy("pid").collect()] == [0, 2]
+        zones.unpersist()
+
+    def test_repeat_partitioned_call_reuses_rows(self, spark, index_builds):
+        from cosmospark.assign import INDEX_MAX_CELLS, assign_zones_partitioned
+
+        zones = local_table(spark, _squares(), ZONES_RAW_SCHEMA)
+        pts = spark.createDataFrame([(0, 0.5, 0.5), (1, 4.5, 0.5)], "pid long, lon double, lat double")
+        _, n_first = _jobs_during(spark, lambda: assign_zones_partitioned(pts, zones))
+        out, n_again = _jobs_during(spark, lambda: assign_zones_partitioned(pts, zones))
+        # the first call alone checkpoints the rows and counts their keys
+        assert n_again <= n_first - 2
+        assert index_builds == [INDEX_MAX_CELLS]
+        assert [r["zone_id"] for r in out.orderBy("pid").collect()] == [0, 2]
+
+    def test_mutable_or_new_tables_rebuild(self, spark, tmp_path, index_builds):
+        from cosmospark.assign import encode_and_assign
+
+        pts = spark.createDataFrame([(0, 0.5, 0.5)], "pid long, lon double, lat double")
+        path = str(tmp_path / "zones.parquet")
+        spark.createDataFrame(_squares(), schema=ZONES_RAW_SCHEMA).write.parquet(path)
+        on_file = spark.read.parquet(path)
+        encode_and_assign(pts, on_file)
+        encode_and_assign(pts, on_file)
+        assert len(index_builds) == 2
+        cached = spark.createDataFrame(_squares(), schema=ZONES_RAW_SCHEMA).cache()
+        twin = spark.createDataFrame(_squares(), schema=ZONES_RAW_SCHEMA).cache()
+        encode_and_assign(pts, cached)
+        encode_and_assign(pts, twin)
+        assert len(index_builds) == 4
+        cached.unpersist()
+        twin.unpersist()
+        encode_and_assign(pts, cached)
+        assert len(index_builds) == 5
+        # a refresh re-reads a cached file-backed table into its cache
+        cached_file = spark.read.parquet(path).cache()
+        encode_and_assign(pts, cached_file)
+        encode_and_assign(pts, cached_file)
+        assert len(index_builds) == 7
+        cached_file.unpersist()
+
+    def test_zone_count_runs_outside_the_memo_lock(self, spark, monkeypatch):
+        """Only the memo lookup holds the module lock: a table's zone
+        count (a Spark job) runs outside it, so no caller waits on a job
+        over another table."""
+        import cosmospark.assign as A
+
+        held = []
+        real = A.auto_max_cells
+
+        def _spy(n):
+            held.append(A._DIMS_LOCK.locked())
+            return real(n)
+
+        monkeypatch.setattr(A, "auto_max_cells", _spy)
+        A.zone_dim(local_table(spark, _squares(), ZONES_RAW_SCHEMA))
+        assert held == [False]
+
+    def test_registry_queries_share_one_zone_dim(self, spark):
+        """The registry's lux zone table is one DataFrame per session, so
+        a second exact-assign query builds no zone index."""
+        from cosmospark.queries import _lux_typed_zones, q_geo_pip_assign, q_geo_zone_counts
+
+        assert _lux_typed_zones(spark) is _lux_typed_zones(spark)
+        q_geo_pip_assign(spark, None)
+        _, n_jobs = _jobs_during(spark, lambda: q_geo_zone_counts(spark, None))
+        assert n_jobs == 0
+
+    def test_memo_entry_dies_with_zone_table(self, spark):
+        import gc
+        import weakref
+
+        import cosmospark.assign as A
+
+        zones = local_table(spark, _squares(), ZONES_RAW_SCHEMA)
+        dim = A.zone_dim(zones, 16)
+        assert A.zone_dim(zones, 16) is dim and zones in A._DIMS
+        ref = weakref.ref(zones)
+        del zones
+        gc.collect()
+        assert ref() is None
+
+    @pytest.mark.parametrize("path", ["broadcast", "partitioned", "fused", "raster_exact", "image_pipeline"])
+    def test_exact_paths_agree(self, spark, exact_case, path):
+        """Every exact path, called twice on one zone table, equals the
+        first broadcast call row for row."""
+        from cosmospark.assign import encode_and_assign
+        from cosmospark.imagejob import image_pipeline
+        from cosmospark.raster import assign_zones_raster
+
+        images, zones, want = exact_case
+        pts = images.select("pid", "lon", "lat")
+        run = {
+            "broadcast": lambda: assign_zones(pts, zones),
+            "partitioned": lambda: assign_zones(pts, zones, strategy="partitioned", id_col="pid"),
+            "fused": lambda: encode_and_assign(pts, zones),
+            "raster_exact": lambda: assign_zones_raster(pts, zones, res=6, exact=True),
+            "image_pipeline": lambda: image_pipeline(images, zones, px=8),
+        }[path]
+        assert _zone_ids(run()) == want
+        assert _zone_ids(run()) == want
+
+
+def _zone_ids(df):
+    return [(r["pid"], r["zone_id"]) for r in df.select("pid", "zone_id").orderBy("pid").collect()]
+
+
+@pytest.fixture(scope="module")
+def exact_case(spark, tmp_path_factory):
+    """(images, zones, broadcast zone ids) over 800 generated images and
+    one local lux zone table shared by every exact path."""
+    from cosmospark.imagejob import gen_images_parquet
+    from cosmospark.queries import _lux_typed_zones
+
+    path = str(tmp_path_factory.mktemp("exact") / "images.parquet")
+    gen_images_parquet(path, 800, px=8)
+    images = spark.read.parquet(path)
+    zones = _lux_typed_zones(spark)
+    want = _zone_ids(assign_zones(images.select("pid", "lon", "lat"), zones))
+    assert sum(z != -1 for _, z in want) > 500
+    return images, zones, want

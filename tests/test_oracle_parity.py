@@ -229,3 +229,26 @@ def test_text_fingerprints_on_hostile_documents(spark, tmp_path):
         pd.testing.assert_frame_equal(
             got, want, check_dtype=False, check_exact=True, obj=name
         )
+
+
+def test_oracle_side_tables_keyed_by_data_dir(tmp_path):
+    """Two data dirs with one basename get separate oracle side files,
+    and each file holds its own table's rows."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = {}
+    for side, ids in (("a", [1, 2, 3]), ("b", [7, 8])):
+        d = tmp_path / side / "sfx"
+        d.mkdir(parents=True)
+        texts = [f"doc {i} words here and there" for i in ids]
+        pq.write_table(pa.table({"doc_id": ids, "text": texts}), str(d / "documents.parquet"))
+        docs[side] = (str(d), ids)
+    paths = {}
+    for side, (d, ids) in docs.items():
+        paths[side] = re.search(r"FROM '([^']+)'", Q.sql_minhash_lsh_pairs(d)).group(1)
+    assert paths["a"] != paths["b"]
+    for side, (d, ids) in docs.items():
+        assert sorted(set(pq.read_table(paths[side]).column("doc_id").to_pylist())) == ids
